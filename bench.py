@@ -4,7 +4,7 @@ Times the headline set at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS]:
 
 - ``qc_pipeline``: the flagship clip QC run (features + langid/perplexity
-  UDF + derived thresholds + rules + scrub + metrics + bucket-partitioned
+  UDF + derived thresholds + rules + scrub + metrics + bucket-clustered
   outputs) over a cached deterministic 20k-clip table -> clips/sec.
 - the heavier parity queries over the sf star schema, forced through a
   noop sink so the full plan executes.

@@ -192,10 +192,10 @@ def next_snapshot_id(spark: SparkSession, out_dir: str) -> int:
 
 
 # Committed-table schemas, for the empty view when a table directory is
-# missing or holds only a _SUCCESS marker (e.g. a corpus where nothing
-# was dropped: the empty-DataFrame append writes no data files, and
-# spark.read.parquet would fail with UNABLE_TO_INFER_SCHEMA). Must match
-# pipeline.KEEP_COLS / DROP_COLS + snapshot_id.
+# missing or holds only a _SUCCESS marker (e.g. a table that was never
+# written or was removed: spark.read.parquet would fail with
+# UNABLE_TO_INFER_SCHEMA). Must match pipeline.KEEP_COLS / DROP_COLS +
+# snapshot_id.
 _TABLE_SCHEMAS = {
     "kept": (
         "clip_id string, bucket int, sr_hz int, dur_ms int, codec string, "
@@ -317,6 +317,25 @@ def _append_parquet_file(dir_path: str, pdf, schema_fn, name: str) -> None:
     os.replace(tmp, os.path.join(dir_path, f"part-{name}.parquet"))
 
 
+def _write_clustered(df: DataFrame, path: str, mode: str = "append") -> None:
+    """The one layout of the batch data tables (kept, dropped,
+    scores_stage): FLAT parquet, ``bucket`` an ordinary int column, rows
+    sorted by bucket within each writer task — so every writer task
+    writes exactly one file, and a bucket filter is served by the
+    parquet min/max statistics of the sorted column instead of
+    ``bucket=N`` directory pruning. The caller chooses the distribution
+    (a rebalance on bucket for a fresh frame, the staged scan's own
+    tasks for a stage-backed increment), so the file count follows the
+    data size, not the bucket fan-out — per-file writer set-up, not
+    bytes, is what a small commit pays for. Committed readers select
+    rows by the (snapshot_id, bucket) semi-join and never depend on the
+    directory shape. Mixed layouts are not
+    supported: a table directory that still holds ``bucket=N``
+    subdirectories from the old partitioned layout must be rewritten
+    (or deleted) before flat files are appended to it."""
+    df.sortWithinPartitions("bucket").write.mode(mode).parquet(path)
+
+
 def _split_grains_pandas(gpdf, snapshot_id: int):
     """Driver-side twin of summary.metrics_grains + metrics_partials +
     cube_lineage over the COLLECTED grouping-sets frame: the cube grain
@@ -409,6 +428,11 @@ def _write_attempt(
     it produced zero rows, so sparse inputs still mark buckets complete
     and resume stays a no-op. Returns the committed lineage rows.
 
+    Data layout: kept/dropped land through ``_write_clustered`` — one
+    flat, bucket-sorted file per writer task, where the writer tasks are
+    the staged scan's own tasks (stage-backed) or the bucket
+    repartition of the persisted frame.
+
     Fixed-cost shape (r4 + r5 resumable-increment fixes — this path runs
     once per increment, so job count matters as much as row count): the
     increment runs exactly THREE Spark jobs — kept write, dropped write,
@@ -425,20 +449,18 @@ def _write_attempt(
     spark = scored.sparkSession
     snap = F.lit(snapshot_id).cast("long").alias("snapshot_id")
     if stage_backed:
-        # rows come from the bucket-PARTITIONED staging table: every scan
-        # task already holds whole buckets (partition directories), so the
-        # partitioned writes emit per-bucket files without a shuffle, and
-        # the plan above them is a pruned narrow scan + codegen'd
-        # rules/scrub — cheaper to recompute per output than to persist
-        # (the persist materialization + bucket shuffle were ~0.5 s of
-        # each increment's fixed cost at bench scale).
+        # rows come from the bucket-clustered staging table: each scan
+        # task of the bucket-filtered stage read writes its own one file
+        # per table (_write_clustered) with no shuffle, and the plan
+        # above them is a filtered narrow scan + codegen'd rules/scrub —
+        # cheaper to recompute per output than to persist (the persist
+        # materialization + bucket shuffle were ~0.5 s of each
+        # increment's fixed cost at bench scale).
         staged = scored
     else:
         staged = scored.repartition("bucket").persist()
     kept = staged.filter(F.col("keep")).select(*KEEP_COLS, snap)
     dropped = staged.filter(~F.col("keep")).select(*DROP_COLS, snap)
-    # already bucket-partitioned: each task holds one bucket, so the
-    # partitioned writes emit one file per bucket without re-shuffling.
     # The kept write materializes the staged cache; everything after it
     # is latency-bound reads of that cache (or of the checkpointed
     # metrics grains), so the remaining jobs run from a thread pool.
@@ -459,20 +481,16 @@ def _write_attempt(
     from qcflow.summary import grains_frame
 
     def _kept_write():
-        kept.write.mode("append").partitionBy("bucket").parquet(
-            f"{out_dir}/kept.parquet"
-        )
+        _write_clustered(kept, f"{out_dir}/kept.parquet")
 
     def _dropped_write():
-        dropped.write.mode("append").partitionBy("bucket").parquet(
-            f"{out_dir}/dropped.parquet"
-        )
+        _write_clustered(dropped, f"{out_dir}/dropped.parquet")
 
     def _grains_collect():
         return grains_frame(staged).toPandas()
 
     if stage_backed:
-        # three independent recomputes of the pruned narrow scan — all
+        # three independent recomputes of the filtered narrow scan — all
         # submitted at once (no cache to race on)
         with ThreadPoolExecutor(max_workers=3) as ex:
             futs = [
@@ -554,10 +572,12 @@ def _stage_scores(
     clips: DataFrame, out_dir: str, n_buckets: int
 ) -> DataFrame:
     """Run the text-feature + langid/perplexity pass ONCE over ``clips``
-    and persist the (narrow) per-clip scores to the bucket-partitioned
+    and persist the (narrow) per-clip scores to the bucket-clustered
     staging table. The write shuffles only the UDF's narrow output
-    (clip_id + features + lang columns — no bytes), one file per bucket,
-    so later bucket-filtered reads are partition-pruned. Returns the
+    (clip_id + features + lang columns — no bytes) in a rebalance on
+    bucket, so AQE sizes the file count to the data; each file is
+    bucket-sorted (``_write_clustered``), so later bucket-filtered reads
+    skip row groups by the column's min/max statistics. Returns the
     read-back staged frame."""
     spark = clips.sparkSession
     # merge the payload-sized scan splits before the narrow UDF pass
@@ -569,11 +589,8 @@ def _stage_scores(
     feats = with_langid_ppl(
         clip_features(narrow), spark
     ).withColumn("bucket", bucket_col(n_buckets))
-    (
-        feats.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(_stage_path(out_dir))
+    _write_clustered(
+        feats.hint("rebalance", "bucket"), _stage_path(out_dir), "overwrite"
     )
     _invalidate_stage_cache(out_dir)
     return spark.read.parquet(_stage_path(out_dir))
@@ -1069,38 +1086,46 @@ def merge_replace_buckets(
     snapshot supersedes every earlier commit for those buckets, so
     committed readers see the new rows INSTEAD OF the old ones. This is
     the parquet-manifest form of Iceberg's MERGE INTO / overwrite-by-
-    partition-filter; old files become dead rows until ``vacuum``."""
+    partition-filter; old files become dead rows until ``vacuum``.
+
+    The kept/dropped rows append through ``_write_clustered`` (via
+    ``_write_attempt``); the staging table is rewritten whole (see
+    below)."""
+    import shutil
+
     thr = load_thresholds(out_dir)
     if thr is None:
         raise ValueError("merge_replace_buckets requires an initialized run")
     clips = spark.read.parquet(clips_path)
     bks = [int(b) for b in buckets]
-    if _has_parquet(_stage_path(out_dir)):
+    stage = _stage_path(out_dir)
+    if _has_parquet(stage):
         # the replace exists BECAUSE the input was corrected, so the
         # staged scores for these buckets are stale: re-score the subset
-        # (one UDF pass) and overwrite exactly those bucket partitions
-        # (dynamic partition overwrite — idempotent, so a crash mid-write
-        # never duplicates staged rows), then build the replacement rows
-        # from the refreshed stage.
+        # (one UDF pass) and write the refreshed stage — the old stage
+        # minus the replaced buckets, plus the re-scored rows — to a
+        # sibling directory, then swap it in. Either the old or the new
+        # stage is live at every instant, so a crash mid-refresh never
+        # duplicates staged rows; a leftover temp directory is cleared
+        # by the next refresh. Then build the replacement rows from the
+        # refreshed stage.
         subset = clips.withColumn("bucket", bucket_col(n_buckets)).filter(
             F.col("bucket").isin(bks)
         ).drop("bucket")
         feats = with_langid_ppl(
             clip_features(subset.drop("bytes")), spark
         ).withColumn("bucket", bucket_col(n_buckets))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                feats.repartition("bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(_stage_path(out_dir))
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        kept_stage = spark.read.parquet(stage).filter(~F.col("bucket").isin(bks))
+        tmp = stage + ".refresh"
+        shutil.rmtree(tmp, ignore_errors=True)
+        _write_clustered(
+            kept_stage.unionByName(feats).hint("rebalance", "bucket"),
+            tmp,
+            "overwrite",
+        )
+        _swap_in(tmp, stage)
         _invalidate_stage_cache(out_dir)  # cached reads now stale
-        staged = spark.read.parquet(_stage_path(out_dir))
+        staged = spark.read.parquet(stage)
         scored = _scored_from_stage(
             staged, clips, thr, n_buckets, bks, False, False
         )
@@ -1166,7 +1191,9 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
     lineage manifest reduced to its currently-valid rows — so manifest
     and partials stay attempt-count-bounded over a long increment+replace
     history, not append-forever. The expire-snapshots / rewrite_data_files
-    analog over the local FS."""
+    analog over the local FS. kept/dropped are rewritten in the
+    ``_write_clustered`` layout, rebalanced on bucket (data-sized file
+    count, bucket-sorted files)."""
     import shutil
 
     stats = {}
@@ -1177,9 +1204,7 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
         stats[table] = committed.count()
         tmp = f"{out_dir}/{table}.parquet.compact"
         shutil.rmtree(tmp, ignore_errors=True)
-        committed.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(tmp)
+        _write_clustered(committed.hint("rebalance", "bucket"), tmp, "overwrite")
         _swap_in(tmp, f"{out_dir}/{table}.parquet")
     if vp is None:
         return stats

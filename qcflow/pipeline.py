@@ -13,9 +13,10 @@ frame persisted once — the single most important physical decision when
     -> thresholds (derived once, globally — exact or sketch)
     -> rule engine -> keep / drop_reasons
     -> scrub                          [regexp_replace chain]
-  outputs: kept / dropped parquet (bucket-partitioned), metrics side
-  tables (drop-reason histogram, langid-confidence histogram), lineage
-  rows per bucket (input/kept/dropped counts) — the resume manifest.
+  outputs: kept / dropped parquet (flat, rows clustered by bucket),
+  metrics side tables (drop-reason histogram, langid-confidence
+  histogram), lineage rows per bucket (input/kept/dropped counts) — the
+  resume manifest.
 
 Scale notes: `bytes` is pruned out of every path unless a bytes-reading
 stage (PCM consistency or acoustic features) is on — verify with
@@ -226,17 +227,24 @@ DROP_COLS = ["clip_id", "bucket", "lang", "lang_conf", "drop_reasons"]
 def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
     """Materialize kept/dropped/metrics/lineage. Returns counts.
 
-    Writes cluster rows by bucket (rebalance hint) so each bucket
-    directory gets contiguous, data-sized files instead of one per
-    upstream task (tasks x buckets tiny files is the classic
-    partitioned-write mistake at scale); oversized buckets may split
-    into several files, which is the correct at-scale behavior.
+    kept/dropped are flat, bucket-clustered parquet
+    (checkpoint._write_clustered): a rebalance on bucket lets AQE size
+    the writer-task count to the data, and each writer task writes ONE
+    bucket-sorted file — not one file per bucket directory, whose
+    per-file writer set-up dominated the write at bench scale.
 
     The one-shot output uses the SAME manifest schema as the resumable
-    path (snapshot_id=0 everywhere, lineage kind='append'), so
-    qcflow.checkpoint readers — read_committed, resume, vacuum,
-    process_increment — work on a plain-run directory instead of
-    crashing on missing columns.
+    path (lineage kind='append'), so qcflow.checkpoint readers —
+    read_committed, resume, vacuum, process_increment — work on a
+    plain-run directory instead of crashing on missing columns. Every
+    run commits under its own snapshot id from
+    checkpoint.next_snapshot_id, allocated before any data is written:
+    a run that crashes before its lineage commit burns its id, so its
+    rows stay invisible to committed readers after any later run, and
+    one-shot appends can share a directory with resumable increments.
+    ``mode='overwrite'`` first removes the previous manifest
+    (lineage + partials), so the run starts a fresh one; ``'append'``
+    adds a snapshot to it.
 
     Fixed-cost shape (r6, the _write_attempt/r5-resume lesson applied to
     the one-shot): exactly THREE Spark jobs — kept write, dropped write,
@@ -257,33 +265,40 @@ def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
         _PARTIALS_SPEC,
         _append_parquet_file,
         _split_grains_pandas,
+        _write_clustered,
         finalize_metrics,
+        next_snapshot_id,
     )
     from qcflow.summary import grains_frame
 
     scored = res.scored
     spark = scored.sparkSession
-    snap = F.lit(0).cast("long").alias("snapshot_id")
+    if mode == "overwrite":
+        import shutil
+
+        # a fresh manifest BEFORE any data write: a crash mid-run then
+        # leaves an empty committed view, never old lineage over new rows
+        for tbl in ("metrics_partials", "lineage"):
+            shutil.rmtree(f"{out_dir}/{tbl}.parquet", ignore_errors=True)
+    snapshot_id = next_snapshot_id(spark, out_dir)
+    snap = F.lit(snapshot_id).cast("long").alias("snapshot_id")
     kept = scored.filter(F.col("keep")).select(*KEEP_COLS, snap)
     dropped = scored.filter(~F.col("keep")).select(*DROP_COLS, snap)
 
     def _kept_write():
-        # rebalance (not repartition): still clusters rows by bucket so
-        # each directory gets contiguous writers, but AQE sizes the task
-        # count to the DATA (guide: REBALANCE before partitioned writes)
-        # — a fixed spark.sql.shuffle.partitions fan-out made every
-        # dimension-sized write pay ~64 near-empty reduce tasks, and at
-        # scale it caps writer parallelism; oversized buckets may split
-        # into several files per directory, which is the correct
-        # at-scale behavior
-        kept.hint("rebalance", "bucket").write.mode(mode).partitionBy(
-            "bucket"
-        ).parquet(f"{out_dir}/kept.parquet")
+        # rebalance (not repartition): still clusters rows by bucket, but
+        # AQE sizes the writer-task count to the DATA — a fixed
+        # spark.sql.shuffle.partitions fan-out made every dimension-sized
+        # write pay ~64 near-empty reduce tasks, and at scale it caps
+        # writer parallelism
+        _write_clustered(
+            kept.hint("rebalance", "bucket"), f"{out_dir}/kept.parquet", mode
+        )
 
     def _dropped_write():
-        dropped.hint("rebalance", "bucket").write.mode(mode).partitionBy(
-            "bucket"
-        ).parquet(f"{out_dir}/dropped.parquet")
+        _write_clustered(
+            dropped.hint("rebalance", "bucket"), f"{out_dir}/dropped.parquet", mode
+        )
 
     def _grains_collect():
         return grains_frame(scored).toPandas()
@@ -299,31 +314,12 @@ def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
         ]
         _, _, gpdf = [f.result() for f in futs]
 
-    partials, by_bucket = _split_grains_pandas(gpdf, 0)
+    partials, by_bucket = _split_grains_pandas(gpdf, snapshot_id)
     if not len(partials):
         # keep the empty-input table contract: a schema-complete empty
         # partials table (the Spark path wrote one too)
         partials = pd.DataFrame({n: [] for n, _ in _PARTIALS_SPEC})
-    tag = "snap0000000000"
-    if mode == "overwrite":
-        import shutil
-
-        for tbl in ("metrics_partials", "lineage"):
-            shutil.rmtree(f"{out_dir}/{tbl}.parquet", ignore_errors=True)
-    else:
-        # append mode: every one-shot run carries snapshot_id=0, so the
-        # fixed file name would os.replace the PREVIOUS run's partials
-        # and lineage while kept/dropped rows still accumulate —
-        # uniquify the tag per run; finalize_metrics sums duplicate
-        # (snapshot, bucket) partials, matching the accumulated rows
-        import glob as _glob
-
-        seq = max(
-            len(_glob.glob(f"{out_dir}/{t}.parquet/part-{tag}*.parquet"))
-            for t in ("metrics_partials", "lineage")
-        )
-        if seq:
-            tag = f"{tag}-{seq:04d}"
+    tag = f"snap{snapshot_id:010d}"
     _append_parquet_file(
         f"{out_dir}/metrics_partials.parquet",
         partials,
@@ -331,7 +327,7 @@ def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
         tag,
     )
     lin_pdf = pd.DataFrame(
-        [(0, "append", b, *by_bucket[b]) for b in sorted(by_bucket)],
+        [(snapshot_id, "append", b, *by_bucket[b]) for b in sorted(by_bucket)],
         columns=[
             "snapshot_id", "kind", "bucket", "n_input", "n_kept", "n_dropped",
         ],
@@ -493,8 +489,14 @@ def dedup_table(
 
     Scale shape: clip bytes cross into Python exactly once for the
     fingerprint (plus once more for the cluster members' quality
-    score); everything that shuffles is 8-byte hashes and ids. The
-    graph is keyed on xxhash64(clip_id) so string ids work with the
+    score), and the band self-join and connected components shuffle
+    only 8-byte hashes and ids. The payload-carrying clips frame itself
+    is NOT shuffle-free: the left joins onto the cluster assignment
+    (on nid) and onto the survivor table (on cluster_rep) each shuffle
+    it when the small side is not broadcast — a traced 302-clip, 32 MB
+    input wrote 66 MB of shuffle. A same-host probe that removed those
+    two shuffles measured a wash at that size, so they stay. The graph
+    is keyed on xxhash64(clip_id) so string ids work with the
     long-keyed CC kernel; survivor choice never depends on the hash
     (quality + lexicographic clip_id only)."""
     from qcflow import audio

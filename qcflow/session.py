@@ -15,6 +15,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+DRIVER_MEM_FRACTION = 0.5
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` default sized to the host: half of
+    physical RAM, capped at 48g. In local mode the driver JVM holds
+    every executor, but it shares the host with the Python workers and
+    the page cache — a fixed 48g heap on a 15 GB host let G1 grow until
+    the kernel OOM-killed the JVM. ``phys_bytes`` defaults to this
+    host's physical memory; ``QCFLOW_DRIVER_MEM`` overrides the result
+    (a deployment setting, read by get_spark)."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = int(phys_bytes * DRIVER_MEM_FRACTION) // (1024 * 1024)
+    return f"{min(mb, DRIVER_MEM_CAP_MB)}m"
+
 
 def get_spark(
     app_name: str = "qcflow",
@@ -74,7 +91,10 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("QCFLOW_MAX_PARTITION_BYTES", "32m"),
         )
-        .config("spark.driver.memory", os.environ.get("QCFLOW_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("QCFLOW_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )

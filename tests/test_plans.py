@@ -104,11 +104,12 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS bdemo")
 
 
-def test_bucket_partition_pruning_on_outputs(spark, tmp_path, clips_t2k):
-    """Reading one bucket of the kept/dropped layout must prune at the
-    directory level (PartitionFilters on the scan) — the resume path
-    re-reads single buckets, and at 10^12 rows a full-scan-then-filter
-    would read the whole corpus."""
+def test_bucket_filter_pushdown_on_outputs(spark, tmp_path, clips_t2k):
+    """Reading one bucket of the flat, bucket-clustered kept layout must
+    push the bucket predicate into the parquet scan (PushedFilters), so
+    row groups whose min/max bucket statistics exclude it are skipped —
+    the resume path re-reads single buckets, and at 10^12 rows a
+    full-scan-then-filter would read the whole corpus."""
     from pyspark.sql import functions as F
 
     from qcflow.pipeline import score_clips, write_outputs
@@ -119,9 +120,35 @@ def test_bucket_partition_pruning_on_outputs(spark, tmp_path, clips_t2k):
     res.release()
     kept = spark.read.parquet(f"{tmp_path}/kept.parquet").filter(F.col("bucket") == 3)
     p = plan_of(kept)
-    seg = p.split("PartitionFilters")[1][:120]
-    assert "bucket" in seg and "= 3" in seg, seg
+    assert "PushedFilters" in p, p
+    seg = p.split("PushedFilters")[1][:120]
+    assert "EqualTo(bucket,3)" in seg, seg
     assert kept.count() > 0
+
+
+def test_stage_backed_increment_pushes_bucket_filter(spark, tmp_path, clips_t2k):
+    """A stage-backed resumable increment reads only its buckets of the
+    flat scores_stage table: the bucket IN-list must reach the parquet
+    scan as a pushed filter (row-group skipping on the bucket-sorted
+    files), not run as a Filter above a full scan."""
+    from qcflow.checkpoint import (
+        _read_stage_cached,
+        _scored_from_stage,
+        load_thresholds,
+        run_resumable,
+    )
+
+    out = str(tmp_path / "resume")
+    run_resumable(spark, clips_t2k, out, n_buckets=16, max_buckets=2)
+    scored = _scored_from_stage(
+        _read_stage_cached(spark, out), None, load_thresholds(out), 16,
+        [5, 6, 7], False, False,
+    )
+    p = plan_of(scored)
+    assert "scores_stage.parquet" in p
+    assert "PushedFilters" in p, p
+    seg = p.split("PushedFilters")[1][:200]
+    assert "In(bucket, [5,6,7])" in seg, seg
 
 
 def test_dynamic_partition_pruning_fires(spark, tmp_path):

@@ -435,3 +435,68 @@ def test_write_outputs_append_accumulates_partials(spark, clips_t2k, tmp_path):
     # finalized metrics follow the accumulated rows (summed partials)
     dr_2 = spark.read.parquet(f"{out}/metrics_drop_reasons.parquet").toPandas()
     assert int(dr_2["n"].sum()) == 2 * int(dr_1["n"].sum())
+
+
+def test_write_outputs_append_crash_stays_invisible(
+    spark, clips_t2k, tmp_path, monkeypatch
+):
+    """An append-mode run that dies at its lineage commit leaves rows on
+    disk that no committed reader may ever see — also after a LATER
+    append run commits. Each run allocates its own snapshot id through
+    the counter, so the later commit cannot retro-commit the crashed
+    run's rows (a shared snapshot 0 did)."""
+    from pyspark.sql import functions as F
+
+    from qcflow import checkpoint
+    from qcflow.checkpoint import read_committed
+    from qcflow.pipeline import QcResult, write_outputs
+
+    clips = spark.read.parquet(clips_t2k).limit(600)
+    res = score_clips(spark, clips, exact_thresholds=False)
+    third = F.pmod(F.xxhash64("clip_id"), F.lit(3))
+
+    def part(k):
+        return QcResult(scored=res.scored.filter(third == k), thresholds=res.thresholds)
+
+    def ids(k):
+        return {r[0] for r in res.scored.filter(third == k).select("clip_id").collect()}
+
+    out = str(tmp_path / "appended")
+    write_outputs(part(0), out, mode="append")
+
+    real_append = checkpoint._append_parquet_file
+
+    def crash_at_commit(dir_path, *a, **kw):
+        if dir_path.endswith("lineage.parquet"):
+            raise RuntimeError("simulated crash at the lineage commit")
+        return real_append(dir_path, *a, **kw)
+
+    monkeypatch.setattr(checkpoint, "_append_parquet_file", crash_at_commit)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        write_outputs(part(1), out, mode="append")
+    monkeypatch.setattr(checkpoint, "_append_parquet_file", real_append)
+    write_outputs(part(2), out, mode="append")
+    res.release()
+
+    raw = {
+        r[0]
+        for t in ("kept", "dropped")
+        for r in spark.read.parquet(f"{out}/{t}.parquet").select("clip_id").collect()
+    }
+    assert ids(1) <= raw  # the crashed run's rows are on disk ...
+    committed = [
+        r[0]
+        for t in ("kept", "dropped")
+        for r in read_committed(spark, out, t).select("clip_id").collect()
+    ]
+    # ... but only the two committed runs are visible, each row once
+    assert len(committed) == len(set(committed))
+    assert set(committed) == ids(0) | ids(2)
+    lin = spark.read.parquet(f"{out}/lineage.parquet").toPandas()
+    assert lin.snapshot_id.nunique() == 2
+    assert int(lin.n_input.sum()) == len(committed)
+    # finalized metrics count the committed runs only
+    dropped = read_committed(spark, out, "dropped")
+    n_reasons = dropped.select(F.explode(F.split("drop_reasons", ","))).count()
+    dr = spark.read.parquet(f"{out}/metrics_drop_reasons.parquet").toPandas()
+    assert int(dr["n"].sum()) == n_reasons

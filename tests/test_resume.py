@@ -4,7 +4,12 @@ MERGE-shaped bucket replace, zero-row buckets, vacuum."""
 
 from __future__ import annotations
 
+import os
+import re
+
+import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,6 +51,36 @@ def _pdf(df, drop=("bucket", "snapshot_id")):
     return out[sorted(out.columns)]
 
 
+_PART_FILE = re.compile(r"^part-(\d{5})-(.+)-c(\d{3})(\.\w+)?\.parquet$")
+
+
+def _data_files(table_dir: str) -> set[str]:
+    """Every parquet data file under a table directory; fails on a
+    ``bucket=N`` subdirectory (the flat layout has none)."""
+    out = set()
+    for root, dirs, files in os.walk(table_dir):
+        assert not [d for d in dirs if d.startswith("bucket=")], root
+        out |= {os.path.join(root, f) for f in files if f.endswith(".parquet")}
+    return out
+
+
+def _writer_tasks(files: set[str]) -> set[tuple[str, str]]:
+    """Spark names a data file part-<task partition>-<write job>-c<file
+    counter>. A flat write emits ONE file (counter 000) per writer task,
+    so (task, job) never repeats — a bucket-partitioned write repeats it
+    once per bucket directory. Also checks every file is bucket-sorted.
+    Returns the (task, job) pairs."""
+    keys = []
+    for path in files:
+        m = _PART_FILE.match(os.path.basename(path))
+        assert m and m.group(3) == "000", path
+        keys.append((m.group(1), m.group(2)))
+        b = pq.read_table(path, columns=["bucket"]).column("bucket").to_numpy()
+        assert (np.diff(b) >= 0).all(), f"{path} is not bucket-sorted"
+    assert len(keys) == len(set(keys)), "a writer task wrote several files"
+    return set(keys)
+
+
 def test_resume_matches_oneshot(spark, out_dirs):
     resumed, oneshot = out_dirs
 
@@ -53,11 +88,20 @@ def test_resume_matches_oneshot(spark, out_dirs):
     r1 = run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS, max_buckets=5)
     assert r1["processed_buckets"] == 5
     assert len(completed_buckets(spark, resumed)) == 5
+    stage_tasks = _writer_tasks(_data_files(f"{resumed}/scores_stage.parquet"))
+    before = {t: _data_files(f"{resumed}/{t}.parquet") for t in ("kept", "dropped")}
 
     # attempt 2 finishes the rest
     r2 = run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS)
     assert r2["processed_buckets"] == 11
     assert r2["remaining"] == 0
+    # the stage-backed increment wrote from the staged scan's own tasks:
+    # one flat file per writer task, at most one per stage file
+    for table in ("kept", "dropped"):
+        added = _data_files(f"{resumed}/{table}.parquet") - before[table]
+        tasks = _writer_tasks(added)
+        assert len({job for _, job in tasks}) == 1, table
+        assert 1 <= len(tasks) <= len(stage_tasks), table
 
     # attempt 3 is a no-op (idempotence)
     r3 = run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS)
@@ -67,6 +111,14 @@ def test_resume_matches_oneshot(spark, out_dirs):
     clips = spark.read.parquet(CLIPS)
     res = score_clips(spark, clips, n_buckets=N_BUCKETS)
     write_outputs(res, oneshot)
+    # one write job per table, one flat file per writer task, and the
+    # rebalance sizes the writer count to the data (never above the
+    # shuffle fan-out, never one per bucket)
+    fan_out = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for table in ("kept", "dropped"):
+        tasks = _writer_tasks(_data_files(f"{oneshot}/{table}.parquet"))
+        assert len({job for _, job in tasks}) == 1, table
+        assert 1 <= len(tasks) <= fan_out, table
 
     for table in ["kept", "dropped"]:
         a = _pdf(read_committed(spark, resumed, table))
@@ -117,7 +169,7 @@ def test_crashed_attempt_rows_are_invisible(spark, tmp_path, clips_ready):
     burned = next_snapshot_id(spark, out)
     kept = spark.read.parquet(f"{out}/kept.parquet")
     dead = kept.limit(50).withColumn("snapshot_id", F.lit(burned).cast("long"))
-    dead.write.mode("append").partitionBy("bucket").parquet(f"{out}/kept.parquet")
+    dead.write.mode("append").parquet(f"{out}/kept.parquet")
 
     assert (
         read_committed(spark, out, "kept")
@@ -240,15 +292,21 @@ def test_vacuum_drops_dead_rows(spark, tmp_path, clips_ready):
     # superseded snapshots: replace one bucket, creating dead history
     bucket = int(spark.read.parquet(f"{out}/kept.parquet").first()["bucket"])
     merge_replace_buckets(spark, CLIPS, out, [bucket], n_buckets=N_BUCKETS)
+    # the stage refresh rewrote the whole stage in one flat write
+    stage_tasks = _writer_tasks(_data_files(f"{out}/scores_stage.parquet"))
+    assert len({job for _, job in stage_tasks}) == 1
     kept = spark.read.parquet(f"{out}/kept.parquet")
     dead = kept.limit(30).withColumn("snapshot_id", F.lit(777).cast("long"))
-    dead.write.mode("append").partitionBy("bucket").parquet(f"{out}/kept.parquet")
+    dead.write.mode("append").parquet(f"{out}/kept.parquet")
 
     before = _pdf(read_committed(spark, out, "kept"))
     metrics_before = read_metrics(spark, out, "drop_reasons").toPandas()
     vacuum(spark, out)
     raw = spark.read.parquet(f"{out}/kept.parquet")
     assert raw.filter(F.col("snapshot_id") == 777).count() == 0
+    for table in ("kept", "dropped"):  # rewritten in one flat write each
+        tasks = _writer_tasks(_data_files(f"{out}/{table}.parquet"))
+        assert len({job for _, job in tasks}) == 1, table
     after = _pdf(read_committed(spark, out, "kept"))
     pd.testing.assert_frame_equal(before, after)
     # manifest + partials expired to the committed view: no dead slices
