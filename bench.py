@@ -161,8 +161,10 @@ def main() -> int:
     # spectral fingerprint (ONE Arrow crossing — the fp frame is
     # localCheckpoint-ed so the self-join reads the staged 8-byte rows,
     # the at-scale plan: fingerprints persist, clips decode once) ->
-    # 4x16 banded Hamming self-join -> exact <=3 filter. min-of-2 like
-    # every decode-crossing key.
+    # pipeline.fp_pairs (4x16 banded Hamming self-join -> exact <=3
+    # filter, the production helper). min-of-2 like every
+    # decode-crossing key.
+    from qcflow.pipeline import fp_pairs
     from qcflow.udfs import with_audio_fp
 
     fp_sec = None
@@ -174,41 +176,7 @@ def main() -> int:
             .filter(F.col("audio_fp").isNotNull())
             .localCheckpoint()
         )
-        fpb = fpf.select(
-            "clip_id",
-            "audio_fp",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band"),
-                            F.expr(
-                                f"(audio_fp >> {j * 16}) & 65535"
-                            ).alias("bucket"),
-                        )
-                        for j in range(4)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("clip_id", "audio_fp", "bb.band", "bb.bucket")
-        fa, fb = fpb.alias("a"), fpb.alias("b")
-        (
-            fa.join(
-                fb,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.clip_id") < F.col("b.clip_id")),
-            )
-            .filter(F.bit_count(F.expr("a.audio_fp ^ b.audio_fp")) <= 3)
-            .select(
-                F.col("a.clip_id").alias("id_a"),
-                F.col("b.clip_id").alias("id_b"),
-            )
-            .dropDuplicates()
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
+        fp_pairs(fpf, "clip_id", 3).write.format("noop").mode("overwrite").save()
         sec = time.time() - t0
         fpf.unpersist()
         fp_sec = sec if fp_sec is None or sec < fp_sec else fp_sec

@@ -18,7 +18,9 @@ Scale notes (10^9-node pair graphs):
   grows linearly with iterations. On a cluster use ``checkpoint()`` with
   a durable dir instead.
 - The per-iteration driver round-trip is ONE aggregated long (count of
-  changed labels) — loop control, not data movement.
+  changed labels), observed by the checkpointing job itself
+  (``DataFrame.observe``) — one job per round, loop control, not data
+  movement.
 - For high-diameter graphs (long chains of serially-edited near-dup
   revisions) hash-min's O(diameter) rounds are the wrong tool:
   ``connected_components`` auto-falls-back to the large-star/small-star
@@ -31,7 +33,7 @@ Scale notes (10^9-node pair graphs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -58,28 +60,33 @@ def connected_components(
     # the adjacency list is reused every iteration — pin it once
     sym = sym.localCheckpoint(eager=True)
 
-    labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
-        "comp", F.col("id")
+    # the first hash-min step is the initial labelling: comp(v) = the min
+    # of v and its neighbours, so a clique is converged after it and the
+    # loop's first round only confirms that
+    labels = (
+        sym.groupBy(F.col("src").alias("id"))
+        .agg(F.min(F.least("src", "dst")).alias("comp"))
+        .localCheckpoint(eager=True)
     )
-    labels = labels.localCheckpoint(eager=True)
 
     for _ in range(max_iter):
-        # hash-min step: comp'(v) = min(comp(v), min_{u->v} comp(u))
+        # hash-min step: comp'(v) = min(comp(v), min_{u->v} comp(u)); the
+        # previous label rides through the same aggregate so the
+        # convergence count is observed by the checkpointing job itself
         prop = sym.join(labels, sym.src == labels.id).select(
-            F.col("dst").alias("id"), "comp"
+            F.col("dst").alias("id"), "comp", F.lit(None).cast("long").alias("old")
         )
+        obs = Observation()
         new = (
-            labels.unionByName(prop)
+            labels.withColumn("old", F.col("comp"))
+            .unionByName(prop)
             .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"))
+            .observe(obs, F.count_if(F.col("comp") != F.col("old")).alias("changed"))
+            .select("id", "comp")
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
+        changed = obs.get["changed"]
         labels.unpersist()  # release the superseded iteration's blocks
         labels = new
         if changed == 0:

@@ -6,7 +6,8 @@ frame persisted once — the single most important physical decision when
 
   read clips
     -> explicit clip_id-hash bucketing (the unit of parallelism & resume)
-    -> optional acoustic features     [ONE decode Arrow crossing]
+    -> optional acoustic features     [ONE decode Arrow crossing, or
+                                       reused as carried by the input]
     -> optional PCM consistency       [byte-length column expressions]
     -> transcript features            [column expressions, codegen]
     -> langid + perplexity            [ONE Arrow crossing]
@@ -19,7 +20,8 @@ frame persisted once — the single most important physical decision when
   resume manifest.
 
 Scale notes: `bytes` is pruned out of every path unless a bytes-reading
-stage (PCM consistency or acoustic features) is on — verify with
+stage (PCM consistency, or acoustic features the input does not already
+carry — dedup_table's survivors carry them) is on — verify with
 .explain: ReadSchema excludes it; decode-crossing variants stage through
 parquet instead of persist (measured 5x). Buckets are
 pmod(xxhash64(clip_id), n_buckets) — stable across cluster sizes, so
@@ -54,7 +56,6 @@ class QcResult:
     thresholds: Thresholds
     _cached: DataFrame | None = None  # the internal persisted frame
     _stage_dir: str | None = None  # parquet staging dir (decode path)
-    _stage_cached: DataFrame | None = None  # persisted decode frame (slim path)
 
     def release(self) -> None:
         """Free the materialization backing ``scored`` (cache or staging
@@ -62,8 +63,6 @@ class QcResult:
         would be a silent no-op."""
         if self._cached is not None:
             self._cached.unpersist()
-        if self._stage_cached is not None:
-            self._stage_cached.unpersist()
         if self._stage_dir is not None:
             import shutil
 
@@ -83,53 +82,35 @@ def score_clips(
     n_buckets: int = N_BUCKETS,
     thresholds: Thresholds | None = None,
     slim_stage: bool = True,
-    stage_mode: str = "parquet",
     persist_scored: bool = True,
 ) -> QcResult:
     """Run features + models + rules + scrub; returns the scored frame
     (persisted) and the derived thresholds. ``check_acoustics`` adds the
-    decoded-PCM feature stage (clip/silence/DC rules) — one extra Arrow
-    crossing that reads the bytes column.
+    acoustic feature stage (clip/silence/DC rules): features the input
+    already carries (dedup_table's survivors) are reused without reading
+    ``bytes``; otherwise one extra Arrow crossing decodes them.
 
-    ``slim_stage`` (acoustic path): stage only (clip_id, decode-derived
-    columns) to parquet and hash-join them back onto the narrow
-    text/model frame, instead of staging the FULL scored frame through
-    the (shared, variance-prone) vdisk. The decode output is 8 doubles a
-    row vs the full frame's transcripts + every feature — the staging
-    write that dominated the acoustic stage's 309-1702 clips/s spread
-    shrinks ~20x (A/B measured in one session, BENCH/BASELINE.md)."""
-    if check_acoustics and not check_pcm and slim_stage:
-        from qcflow.udfs import AUDIO_FEATURE_COLS, with_audio_features
+    ``slim_stage`` (acoustic decode path): stage only (clip_id,
+    decode-derived columns) to parquet and hash-join them back onto the
+    narrow text/model frame, instead of staging the FULL scored frame
+    through the (shared, variance-prone) vdisk. The decode output is 8
+    doubles a row vs the full frame's transcripts + every feature — the
+    staging write that dominated the acoustic stage's 309-1702 clips/s
+    spread shrinks ~20x (A/B measured in one session,
+    BENCH/BASELINE.md)."""
+    import tempfile
 
-        import tempfile
+    from qcflow.udfs import AUDIO_FEATURE_COLS, acoustic_features, has_audio_features
 
+    decode = check_acoustics and not has_audio_features(clips)
+    if decode and not check_pcm and slim_stage:
         # decode pass: bytes never leave the scan stage; only the derived
         # acoustic columns are staged
-        dec = with_audio_features(
-            clips.select("clip_id", "bytes", "codec", "sr_hz")
-        ).select("clip_id", *AUDIO_FEATURE_COLS)
-        stage_dir = None
-        stage_cached = None
-        if stage_mode == "persist":
-            # ~80 B/row (clip_id + 8 doubles) in MEMORY_AND_DISK instead
-            # of a parquet roundtrip. Measured a WASH vs parquet staging
-            # (best-of-3 interleaved: parquet 10.3s vs persist 11.2s at
-            # 60k clips, BENCH/ab_stage_persist.json): the slim staging
-            # write is ~5 MB, so the stage is bounded by the decode
-            # crossing itself, not the staging medium. parquet stays the
-            # default (no lineage-recompute risk on executor loss, no
-            # extra materializing job); this mode exists for
-            # memory-rich clusters that want zero staging files.
-            from pyspark import StorageLevel
-
-            dec = dec.persist(StorageLevel.MEMORY_AND_DISK)
-            dec.count()  # materialize: exactly one decode crossing
-            dec_r = dec
-            stage_cached = dec
-        else:
-            stage_dir = tempfile.mkdtemp(prefix="qcflow_stage_")
-            dec.write.mode("overwrite").parquet(f"{stage_dir}/acoustic.parquet")
-            dec_r = spark.read.parquet(f"{stage_dir}/acoustic.parquet")
+        stage_dir = tempfile.mkdtemp(prefix="qcflow_stage_")
+        acoustic_features(clips).select("clip_id", *AUDIO_FEATURE_COLS).write.mode(
+            "overwrite"
+        ).parquet(f"{stage_dir}/acoustic.parquet")
+        dec = spark.read.parquet(f"{stage_dir}/acoustic.parquet")
 
         narrow = clips.drop("bytes").withColumn("bucket", bucket_col(n_buckets))
         # same narrow-frame de-fragmentation as the main path below
@@ -137,28 +118,22 @@ def score_clips(
             max(2 * spark.sparkContext.defaultParallelism, 1)
         )
         narrow = with_langid_ppl(clip_features(narrow), spark)
-        df = narrow.join(dec_r, "clip_id")
+        df = narrow.join(dec, "clip_id")
         # the joined frame feeds threshold derivation AND the rule pass —
         # persist it (narrow columns only; the expensive decode is
-        # already materialized in the staging table/cache)
+        # already materialized in the staging table)
         df = cached = df.persist()
         thr = thresholds or derive_thresholds(df, exact=exact_thresholds)
         flagged = scrub(
             apply_rules(df, thr, extra_rules=list(acoustic_rule_conditions()))
         )
         return QcResult(
-            scored=flagged,
-            thresholds=thr,
-            _cached=cached,
-            _stage_dir=stage_dir,
-            _stage_cached=stage_cached,
+            scored=flagged, thresholds=thr, _cached=cached, _stage_dir=stage_dir
         )
     df = clips.withColumn("bucket", bucket_col(n_buckets))
     if check_acoustics:
-        # decode crossing while bytes are still in the plan
-        from qcflow.udfs import with_audio_features
-
-        df = with_audio_features(df)
+        # decode crossing (if any) while bytes are still in the plan
+        df = acoustic_features(df)
     if check_pcm:
         # the consistency columns derive from byte LENGTHS only; drop the
         # payload right after so the persist/shuffles stay narrow
@@ -184,9 +159,7 @@ def score_clips(
     # table anyway.
     cached = None
     stage_dir = None
-    if check_pcm or check_acoustics:
-        import tempfile
-
+    if check_pcm or decode:
         stage_dir = tempfile.mkdtemp(prefix="qcflow_stage_")
         df.write.mode("overwrite").parquet(f"{stage_dir}/scored.parquet")
         df = spark.read.parquet(f"{stage_dir}/scored.parquet")
@@ -366,13 +339,16 @@ def normalize_clips(
     lineage and are cheap to drop downstream. Map-only: one Arrow
     crossing, no shuffle at any scale."""
     from qcflow import audio
-    from qcflow.udfs import with_normalize
+    from qcflow.udfs import AUDIO_FEATURE_COLS, with_normalize
 
     decodable = clips.filter(
         F.col("bytes").isNotNull() & F.col("codec").isin(*audio.KNOWN_CODECS)
     )
+    # features of the OLD payload must not ride along with the new bytes
     carried = [
-        c for c in clips.columns if c not in ("bytes", "codec", "sr_hz", "dur_ms")
+        c
+        for c in clips.columns
+        if c not in ("bytes", "codec", "sr_hz", "dur_ms", *AUDIO_FEATURE_COLS)
     ]
     ndf = with_normalize(decodable, target_sr=target_sr, trim=trim, gain=gain)
     return ndf.select(
@@ -411,7 +387,7 @@ def segment_table(
     for lineage."""
     from qcflow import audio
     from qcflow.features import align_transcript_segments, valid_sr_col
-    from qcflow.udfs import segment_clips
+    from qcflow.udfs import AUDIO_FEATURE_COLS, segment_clips
 
     decodable = clips.filter(
         F.col("bytes").isNotNull() & F.col("codec").isin(*audio.KNOWN_CODECS)
@@ -420,10 +396,10 @@ def segment_table(
     # the emitted rows must carry that EFFECTIVE rate (sr_hz=0 would both
     # mislabel the payload and ANSI-throw in the dur_ms division)
     sr_eff = F.when(valid_sr_col(), F.col("sr_hz")).otherwise(F.lit(8000))
+    # features of the parent payload must not ride along with the segments
+    drop = ("clip_id", "bytes", "codec", "sr_hz", "dur_ms", "transcript")
     carried = [
-        c
-        for c in clips.columns
-        if c not in ("clip_id", "bytes", "codec", "sr_hz", "dur_ms", "transcript")
+        c for c in clips.columns if c not in (*drop, *AUDIO_FEATURE_COLS)
     ]
     segs = segment_clips(decodable, win_ms=win_ms).select(
         F.col("clip_id").alias("parent_id"),
@@ -472,86 +448,113 @@ def _fp_bands(fp: DataFrame, id_col: str, fp_col: str = "audio_fp") -> DataFrame
     ).select(id_col, fp_col, "bb.band", "bb.bucket")
 
 
-def dedup_table(
-    clips: DataFrame, ham_max: int = 3, quality: str = "snr"
-) -> DataFrame:
-    """Audio near-dup dedup stage producing a VALID clips table of
-    SURVIVORS: fingerprint every decodable clip (one Arrow crossing
-    into a localCheckpointed 8-byte frame — the staged-fingerprint plan
-    the dedup_audio_fp_10k bench key measures), banded Hamming
-    self-join within ``ham_max``, distributed connected components over
-    the pair graph, then ONE survivor per cluster — the
-    highest-quality member (blind SNR estimate, decoded only for
-    cluster MEMBERS — a tiny fraction of the corpus) with a min-id
-    tie-break, the dedup_best_survivor shape. Non-clustered rows pass
-    through untouched; ``cluster_rep`` / ``cluster_size`` ride along
-    (NULL for singletons) for lineage.
-
-    Scale shape: clip bytes cross into Python exactly once for the
-    fingerprint (plus once more for the cluster members' quality
-    score), and the band self-join and connected components shuffle
-    only 8-byte hashes and ids. The payload-carrying clips frame itself
-    is NOT shuffle-free: the left joins onto the cluster assignment
-    (on nid) and onto the survivor table (on cluster_rep) each shuffle
-    it when the small side is not broadcast — a traced 302-clip, 32 MB
-    input wrote 66 MB of shuffle. A same-host probe that removed those
-    two shuffles measured a wash at that size, so they stay. The graph
-    is keyed on xxhash64(clip_id) so string ids work with the
-    long-keyed CC kernel; survivor choice never depends on the hash
-    (quality + lexicographic clip_id only)."""
-    from qcflow import audio
-    from qcflow.graph import resolve_clusters
-    from qcflow.udfs import with_audio_fp, with_snr_estimate
-
-    decodable = clips.filter(
-        F.col("bytes").isNotNull() & F.col("codec").isin(*audio.KNOWN_CODECS)
-    )
-    fp = (
-        with_audio_fp(decodable)
-        .select(F.xxhash64("clip_id").alias("nid"), "clip_id", "audio_fp")
-        .filter(F.col("audio_fp").isNotNull())
-        .localCheckpoint()
-    )
-    bands = _fp_bands(fp, "nid")
+def fp_pairs(fp: DataFrame, id_col: str, ham_max: int = 3) -> DataFrame:
+    """Near-dup pairs (id_a < id_b) of a fingerprint frame (``id_col``,
+    ``audio_fp``): band explode, (band, bucket) self-join, exact Hamming
+    filter within ``ham_max``. The only rows shuffled are the 8-byte
+    hashes and ids. Shared by dedup_table, dedup_increment and the
+    dedup_audio_fp_10k bench key, so the bench times this code."""
+    bands = _fp_bands(fp, id_col)
     a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.nid") < F.col("b.nid")),
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .filter(F.bit_count(F.expr("a.audio_fp ^ b.audio_fp")) <= ham_max)
-        .select(F.col("a.nid").alias("id_a"), F.col("b.nid").alias("id_b"))
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .dropDuplicates()
     )
-    clusters = resolve_clusters(pairs).withColumnRenamed("doc_id", "nid")
-    withc = clips.withColumn("nid", F.xxhash64("clip_id")).join(
-        clusters, "nid", "left"
-    )
-    members = withc.filter(F.col("cluster_rep").isNotNull())
-    scored = with_snr_estimate(members).select(
-        "nid",
-        "cluster_rep",
-        F.coalesce(F.col("snr_est_db"), F.lit(-1e9)).alias("_q"),
-        F.col("clip_id").alias("_sid"),
-    )
-    best = (
-        scored.groupBy("cluster_rep")
-        .agg(
-            F.min(
-                F.struct((-F.col("_q")).alias("nq"), F.col("_sid").alias("sid"))
-            ).alias("m")
+
+
+def dedup_table(
+    clips: DataFrame, ham_max: int = 3, quality: str = "snr"
+) -> DataFrame:
+    """Audio near-dup dedup stage producing a VALID clips table of
+    SURVIVORS: banded Hamming self-join of spectral fingerprints within
+    ``ham_max``, distributed connected components over the pair graph,
+    then ONE survivor per cluster — the highest-quality member (blind
+    SNR estimate) with a min-clip_id tie-break, the dedup_best_survivor
+    shape. Non-clustered rows pass through untouched; ``cluster_rep`` /
+    ``cluster_size`` ride along (NULL for singletons) for lineage, and
+    every row carries ``AUDIO_FEATURE_COLS`` (NULL where undecodable),
+    which score_clips(check_acoustics=True) reuses instead of decoding
+    the survivors again.
+
+    Scale shape: clip bytes cross into Python exactly ONCE — one decode
+    (udfs.with_decode) emits the fingerprint, the SNR and the acoustic
+    features into a localCheckpointed slim frame (no bytes). The band
+    self-join, the connected components and the survivor choice all
+    read that frame and shuffle only hashes, ids and a few doubles; the
+    cluster size and survivor come from one window per cluster. The
+    survivor decision (one slim row per clip row) is BROADCAST onto the
+    clips frame, so the payload-carrying frame never shuffles. The
+    decision is keyed on (xxhash64(clip_id), a content hash of
+    bytes/codec/sr_hz) and deduplicated on that key, so a repeated
+    clip_id never multiplies rows and each copy keeps its own features.
+    The graph is keyed on xxhash64(clip_id) so string ids work with the
+    long-keyed CC kernel; survivor choice never depends on the hash
+    (quality + lexicographic clip_id only)."""
+    from pyspark.sql import Window
+
+    from qcflow import audio
+    from qcflow.graph import connected_components
+    from qcflow.udfs import AUDIO_FEATURE_COLS, with_decode
+
+    decodable = F.col("bytes").isNotNull() & F.col("codec").isin(*audio.KNOWN_CODECS)
+    keys = [
+        F.xxhash64("clip_id").alias("nid"),
+        F.xxhash64("bytes", "codec", "sr_hz").alias("_ch"),
+    ]
+    # every clip row, its payload handed to the decode only when decodable
+    # (the rest decode to NULL without their bytes crossing into Python)
+    stage = (
+        with_decode(
+            clips.select(
+                *keys,
+                "clip_id",
+                F.when(decodable, F.col("bytes")).alias("bytes"),
+                "codec",
+                "sr_hz",
+            ),
+            ["audio_fp", "snr_est_db", *AUDIO_FEATURE_COLS],
         )
-        .select("cluster_rep", F.col("m.sid").alias("_survivor"))
+        .drop("bytes", "codec", "sr_hz")
+        .localCheckpoint()
+    )
+    pairs = fp_pairs(stage.filter(F.col("audio_fp").isNotNull()), "nid", ham_max)
+    cc = connected_components(pairs, src="id_a", dst="id_b").select(
+        F.col("id").alias("nid"), F.col("comp").alias("cluster_rep")
+    )
+    # one window per cluster; a singleton's window is its own nid, so no
+    # window partition grows with the corpus
+    w = Window.partitionBy(F.coalesce("cluster_rep", "nid"))
+    rank = F.struct(  # quality first, then min clip_id
+        (-F.coalesce(F.col("snr_est_db"), F.lit(-1e9))).alias("nq"),
+        F.col("clip_id").alias("sid"),
+    )
+    clustered = F.col("cluster_rep").isNotNull()
+    decision = (
+        stage.join(cc, "nid", "left")
+        .withColumns(
+            {
+                "cluster_size": F.when(
+                    clustered, F.size(F.collect_set("nid").over(w)).cast("long")
+                ),
+                "_survivor": F.min(rank).over(w)["sid"],
+            }
+        )
+        .filter(~clustered | (F.col("clip_id") == F.col("_survivor")))
+        .select("nid", "_ch", "cluster_rep", "cluster_size", *AUDIO_FEATURE_COLS)
+        .dropDuplicates(["nid", "_ch"])
     )
     return (
-        withc.join(best, "cluster_rep", "left")
-        .filter(
-            F.col("cluster_rep").isNull()
-            | (F.col("clip_id") == F.col("_survivor"))
-        )
-        .drop("nid", "_survivor")
+        clips.drop("cluster_rep", "cluster_size", *AUDIO_FEATURE_COLS)
+        .select("*", *keys)
+        .join(F.broadcast(decision), ["nid", "_ch"])
+        .drop("nid", "_ch")
     )
 
 
@@ -667,19 +670,9 @@ def dedup_increment(
         .distinct()
     )
     # (b) intra-increment clusters -> min-id survivor
-    a, b = new_bands.alias("a"), new_bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.nid") < F.col("b.nid")),
-        )
-        .filter(F.bit_count(F.expr("a.audio_fp ^ b.audio_fp")) <= ham_max)
-        .select(F.col("a.nid").alias("id_a"), F.col("b.nid").alias("id_b"))
-        .dropDuplicates()
+    clusters = resolve_clusters(fp_pairs(fp, "nid", ham_max)).withColumnRenamed(
+        "doc_id", "nid"
     )
-    clusters = resolve_clusters(pairs).withColumnRenamed("doc_id", "nid")
     withc = (
         new_clips.withColumn("nid", F.xxhash64("clip_id"))
         .join(clusters, "nid", "left")

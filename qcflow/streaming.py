@@ -85,9 +85,9 @@ def stream_score(
     extra_rules = []
     if check_acoustics:
         from qcflow.rules import acoustic_rule_conditions
-        from qcflow.udfs import with_audio_features
+        from qcflow.udfs import acoustic_features
 
-        stream = with_audio_features(stream)
+        stream = acoustic_features(stream)
         extra_rules = acoustic_rule_conditions()
     scored = stream.drop("bytes").withColumn("bucket", bucket_col(n_buckets))
     scored = clip_features(scored)

@@ -1,9 +1,11 @@
 """The only Python-in-the-loop: Arrow-batched pandas UDFs.
 
-Three crossings, all vectorized (never per-row Python):
+The main crossings, all vectorized (never per-row Python):
 
 - ``with_langid_ppl``  — langid (lang, conf) + perplexity in ONE struct
   UDF so the transcript column crosses the Arrow boundary once.
+- ``with_decode``      — decode bytes ONCE -> any of fingerprint, blind
+  SNR estimate and acoustic features, computing only what is asked for.
 - ``with_pcm_stats``   — decode bytes -> sample count / duration / RMS.
 - ``with_snr``         — decode + re-synthesize the original waveform from
   clip_id -> SNR dB (the per-row PCM invariant; validation path only).
@@ -277,81 +279,155 @@ AUDIO_FEATURE_COLS = [
 ]
 
 
-def with_audio_features(df: DataFrame) -> DataFrame:
-    """Acoustic QC features from the decoded PCM, one Arrow crossing:
+SNR_COLS = ["noise_floor_db", "speech_db", "snr_est_db"]
 
-    - ``ac_n_samples`` / ``ac_rms`` / ``ac_peak``: decode-true length,
-      root-mean-square level, absolute peak
-    - ``clip_ratio``: fraction of samples at/above |0.95| (hard-clipping
-      density — loudness-war or gain-staging damage)
-    - ``silence_ratio``: fraction of 20 ms frames whose RMS is below 0.01
-      (dead air / mic failure)
-    - ``zcr``: mean zero-crossing rate (sign flips per sample; near-DC or
-      subsonic rumble shows up as zcr ~ 0)
-    - ``dc_offset``: sample mean (converter bias)
+# every column the decode kernel can emit, in output order
+_DECODE_TYPES = {
+    "audio_fp": "long",
+    **{c: "double" for c in SNR_COLS},
+    **{c: "long" if c == "ac_n_samples" else "double" for c in AUDIO_FEATURE_COLS},
+}
 
-    Rows with NULL bytes or an unknown codec yield all-NULL features, so
-    downstream rules never flag them (NaN-never-flags, SURVEY §1.2).
-    Per-clip math is ``acoustic_stats`` (blocked single pass, see its
-    docstring); the per-row loop here only sequences clips."""
 
-    @F.pandas_udf(
-        "ac_n_samples long, ac_rms double, ac_peak double, clip_ratio double,"
-        " silence_ratio double, zcr double, dc_offset double,"
-        " spectral_flatness double"
+def with_decode(df: DataFrame, cols) -> DataFrame:
+    """ONE decode crossing for every decode-derived column: each row's
+    bytes are decoded once and only the requested outputs are computed,
+    so a fingerprint-only caller never pays for the acoustic features.
+    ``cols`` is any subset of:
+
+    - ``audio_fp``: 64-bit spectral fingerprint (audio.audio_fp64) —
+      decode -> 5-segment x 17-band energy -> 4x16 transition-sign bits
+      packed as a long; the 8-byte column the banded Hamming self-join
+      ships, so clip bytes never reach a shuffle
+    - ``noise_floor_db`` / ``speech_db`` / ``snr_est_db``: blind SNR
+      estimate from frame-RMS order statistics (``snr_estimate``)
+    - ``AUDIO_FEATURE_COLS``: acoustic QC features (``acoustic_stats``) —
+      decode-true length ``ac_n_samples``, ``ac_rms``, ``ac_peak``,
+      ``clip_ratio`` (samples at/above |0.95|), ``silence_ratio`` (20 ms
+      frames below RMS 0.01), ``zcr`` (sign flips per sample),
+      ``dc_offset`` (sample mean), ``spectral_flatness``
+
+    Row-level guards, never task-fatal (a QC stage must not die on
+    garbage rows): NULL bytes, an unknown codec or an undecodable
+    payload (e.g. odd-length pcm16) yield NULL for every output. A NULL
+    ``sr_hz`` (Arrow null -> NaN) yields a NULL fingerprint and SNR but
+    takes the 8000 Hz fallback for the acoustic features, whose silence
+    frame grid is the only rate-dependent part; an invalid rate takes
+    the 8000 fallback everywhere. NULL features never trip a rule
+    (NaN-never-flags, SURVEY §1.2).
+
+    Per-row deterministic (the construction-truth gates rely on it), but
+    flagged nondeterministic so Catalyst never CLONES the decode: the
+    banded self-join infers IsNotNull on the band/bucket keys, and
+    pushing that inferred predicate through the projection re-evaluates
+    the UDF once for the filter and once for the projection — every clip
+    decoded twice PER JOIN BRANCH. The flag only constrains the
+    optimizer (no pushdown through, no duplication); plan pinned in
+    tests/test_plans.py."""
+    # the kernel computes whole output groups, only those asked for
+    emitted = [
+        c
+        for group in (["audio_fp"], SNR_COLS, AUDIO_FEATURE_COLS)
+        if set(group) & set(cols)
+        for c in group
+    ]
+    want_fp, want_snr, want_ac = (
+        c in emitted for c in ("audio_fp", "snr_est_db", "ac_rms")
     )
+    ac_keys = AUDIO_FEATURE_COLS[1:]
+
+    @F.pandas_udf(", ".join(f"{c} {_DECODE_TYPES[c]}" for c in emitted))
     def _udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys = (
-            "ac_rms",
-            "ac_peak",
-            "clip_ratio",
-            "silence_ratio",
-            "zcr",
-            "dc_offset",
-            "spectral_flatness",
-        )
         for pdf in it:
-            n_rows = len(pdf)
-            ns = np.full(n_rows, -1, dtype=np.int64)
-            cols = {k: np.full(n_rows, np.nan) for k in keys}
+            n = len(pdf)
+            # python-int accumulator: a float64 staging array would
+            # corrupt low bits of any |fingerprint| >= 2^53
+            fps: list = [None] * n
+            snr = {c: np.full(n, np.nan) for c in SNR_COLS}
+            ns = np.full(n, -1, dtype=np.int64)
+            ac = {k: np.full(n, np.nan) for k in ac_keys}
             for i, (b, codec, sr) in enumerate(
                 zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"])
             ):
                 if b is None or codec not in audio.KNOWN_CODECS:
                     continue
-                # row-level guards, never task-fatal (a QC stage must not
-                # die on garbage rows): malformed bytes (e.g. odd-length
-                # pcm16 breaks frombuffer) yield NULL features; NULL
-                # sr_hz (Arrow null -> NaN) takes the same 8000 fallback
-                # as an invalid rate — only the silence frame grid
-                # depends on it
                 try:
-                    x32 = audio.decode(bytes(b), codec)
+                    x = audio.decode(bytes(b), codec)
                 except (ValueError, TypeError):
                     continue
-                sr_eff = (
-                    int(sr)
-                    if sr is not None and not pd.isna(sr) and int(sr) in audio.VALID_SR
-                    else 8000
-                )
-                ns[i] = len(x32)
-                if not len(x32):
-                    continue
-                stats = acoustic_stats(x32, sr_eff)
-                for k in keys:
-                    cols[k][i] = stats[k]
-            out = pd.DataFrame(cols)
-            out.insert(0, "ac_n_samples", ns)
-            yield out
+                try:
+                    sr_eff = (
+                        int(sr)
+                        if sr is not None and int(sr) in audio.VALID_SR
+                        else 8000
+                    )
+                except (ValueError, TypeError):
+                    sr_eff = None  # NULL rate: no fingerprint / SNR
+                if sr_eff is not None:
+                    if want_fp:
+                        fps[i] = audio.audio_fp64(x, sr_eff)
+                    if want_snr:
+                        for c, v in zip(SNR_COLS, snr_estimate(x, sr_eff)):
+                            snr[c][i] = v
+                if want_ac:
+                    ns[i] = len(x)
+                    if len(x):
+                        stats = acoustic_stats(x, 8000 if sr_eff is None else sr_eff)
+                        for k in ac_keys:
+                            ac[k][i] = stats[k]
+            out = {
+                "audio_fp": pd.Series(fps, dtype="Int64"),
+                **snr,
+                "ac_n_samples": ns,
+                **ac,
+            }
+            yield pd.DataFrame({c: out[c] for c in emitted})
 
-    out = df.withColumn("_a", _udf(F.struct("bytes", "codec", "sr_hz")))
-    out = out.select("*", *[f"_a.{c}" for c in AUDIO_FEATURE_COLS]).drop("_a")
-    # -1 marks "undecodable" inside the Arrow frame (long has no NaN);
-    # surface it as NULL like every other unavailable feature
-    return out.withColumn(
-        "ac_n_samples",
-        F.when(F.col("ac_n_samples") >= 0, F.col("ac_n_samples")),
-    )
+    dec = _udf.asNondeterministic()(F.struct("bytes", "codec", "sr_hz"))
+    out = df.drop(*cols).withColumn("_dec", dec)
+    out = out.withColumns({c: F.col(f"_dec.{c}") for c in cols}).drop("_dec")
+    if "ac_n_samples" in cols:
+        # -1 marks "undecodable" inside the Arrow frame (long has no
+        # NaN); surface it as NULL like every other unavailable feature
+        out = out.withColumn(
+            "ac_n_samples", F.when(F.col("ac_n_samples") >= 0, F.col("ac_n_samples"))
+        )
+    return out
+
+
+def with_audio_features(df: DataFrame) -> DataFrame:
+    """``AUDIO_FEATURE_COLS`` from one decode crossing (``with_decode``)."""
+    return with_decode(df, AUDIO_FEATURE_COLS)
+
+
+def with_audio_fp(df: DataFrame) -> DataFrame:
+    """``audio_fp`` alone from one decode crossing (``with_decode``)."""
+    return with_decode(df, ["audio_fp"])
+
+
+def with_snr_estimate(df: DataFrame) -> DataFrame:
+    """The blind SNR estimate (``SNR_COLS``) from one decode crossing
+    (``with_decode``). Low ``snr_est_db`` = noisy capture, high noise
+    floor = hum/hiss — quality filtering without the clean reference the
+    ``with_snr`` invariant needs."""
+    return with_decode(df, SNR_COLS)
+
+
+def has_audio_features(df: DataFrame) -> bool:
+    """Whether ``df`` already carries every ``AUDIO_FEATURE_COLS``."""
+    return set(AUDIO_FEATURE_COLS) <= set(df.columns)
+
+
+def acoustic_features(df: DataFrame) -> DataFrame:
+    """``df`` with ``AUDIO_FEATURE_COLS`` for the acoustic QC rules. When
+    ``df`` already carries every feature column (dedup_table's survivors
+    do) they are reused and ``bytes`` is never read; otherwise one decode
+    crossing computes them. Stages that rewrite ``bytes`` (normalize,
+    segment) drop the feature columns, so carried features always
+    describe the row's current payload. Callers that need only
+    ``clip_id`` + features select them; column pruning keeps the scan to
+    what the chosen branch reads."""
+    return df if has_audio_features(df) else with_audio_features(df)
 
 
 def with_snr(df: DataFrame) -> DataFrame:
@@ -385,51 +461,6 @@ def with_snr(df: DataFrame) -> DataFrame:
 
     return df.withColumn(
         "snr_db", _udf(F.struct("clip_id", "bytes", "codec", "sr_hz"))
-    )
-
-
-def with_audio_fp(df: DataFrame) -> DataFrame:
-    """64-bit spectral fingerprint per clip (audio.audio_fp64) from the
-    encoded bytes, one Arrow crossing: decode -> 5-segment x 17-band
-    energy -> 4x16 transition-sign bits packed as a long ``audio_fp``.
-    The 8-byte output column is what the banded Hamming self-join ships
-    — the clip bytes never reach a shuffle. Rows with NULL bytes, an
-    unknown codec, or undecodable payloads yield NULL (never task-fatal,
-    same row-level-guard contract as the other decode UDFs)."""
-
-    @F.pandas_udf("long")
-    def _udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        for pdf in it:
-            # python-int accumulator: a float64 staging array would
-            # corrupt low bits of any |fingerprint| >= 2^53
-            out: list = [None] * len(pdf)
-            for i, (b, codec, sr) in enumerate(
-                zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"])
-            ):
-                if b is None or codec not in audio.KNOWN_CODECS:
-                    continue
-                try:
-                    x = audio.decode(bytes(b), codec)
-                    sr_eff = (
-                        int(sr)
-                        if sr is not None and int(sr) in audio.VALID_SR
-                        else 8000
-                    )
-                except (ValueError, TypeError):
-                    continue
-                out[i] = audio.audio_fp64(x, sr_eff)
-            yield pd.Series(out, dtype="Int64")
-
-    # Per-row deterministic (the construction-truth gate relies on it),
-    # but flagged nondeterministic so Catalyst never CLONES the decode:
-    # the banded self-join infers IsNotNull on the band/bucket keys,
-    # and pushing that inferred predicate through the fingerprint
-    # projection re-evaluates the UDF once for the filter and once for
-    # the projection — every clip decoded twice PER JOIN BRANCH. The
-    # flag only constrains the optimizer (no pushdown through, no
-    # duplication); plan pinned in tests/test_plans.py.
-    return df.withColumn(
-        "audio_fp", _udf.asNondeterministic()(F.struct("bytes", "codec", "sr_hz"))
     )
 
 
@@ -676,47 +707,6 @@ def snr_estimate(
     noise_db = 20.0 * float(np.log10(lo))
     speech_db = 20.0 * float(np.log10(hi))
     return noise_db, speech_db, speech_db - noise_db
-
-
-def with_snr_estimate(df: DataFrame) -> DataFrame:
-    """Blind SNR estimate per clip: decode -> frame-RMS order stats ->
-    (noise_floor_db, speech_db, snr_est_db). Map-only, one Arrow
-    crossing, bytes never leave the scan task; NULL bytes / unknown
-    codec / undecodable payloads yield NULLs (row-level guard). The
-    estimate feeds quality filtering the same way the acoustic flags
-    do — low snr_est_db = noisy capture, high noise floor = hum/hiss —
-    without needing the clean reference the snr_vs_synth invariant
-    uses."""
-
-    @F.pandas_udf("noise_floor_db double, speech_db double, snr_est_db double")
-    def _udf(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            nf = np.full(len(pdf), np.nan)
-            sp = np.full(len(pdf), np.nan)
-            sn = np.full(len(pdf), np.nan)
-            for i, (b, codec, sr) in enumerate(
-                zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"])
-            ):
-                if b is None or codec not in audio.KNOWN_CODECS:
-                    continue
-                try:
-                    x = audio.decode(bytes(b), codec)
-                    sr_eff = (
-                        int(sr)
-                        if sr is not None and int(sr) in audio.VALID_SR
-                        else 8000
-                    )
-                except (ValueError, TypeError):
-                    continue
-                nf[i], sp[i], sn[i] = snr_estimate(x, sr_eff)
-            yield pd.DataFrame(
-                {"noise_floor_db": nf, "speech_db": sp, "snr_est_db": sn}
-            )
-
-    out = df.withColumn("_se", _udf(F.struct("bytes", "codec", "sr_hz")))
-    return out.select(
-        "*", "_se.noise_floor_db", "_se.speech_db", "_se.snr_est_db"
-    ).drop("_se")
 
 
 def with_normalize(

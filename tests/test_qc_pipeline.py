@@ -278,37 +278,6 @@ def test_slim_stage_equals_full_stage(spark, clips_dir):
     pd.testing.assert_frame_equal(frames[False], frames[True])
 
 
-def test_stage_persist_equals_parquet(spark, clips_dir):
-    """stage_mode='persist' (MEMORY_AND_DISK decode frame) and the
-    default parquet staging are the same logical plan; with fixed
-    thresholds the scored output must match row for row (A/B measured a
-    wash, BENCH/ab_stage_persist.json — this pins the equivalence)."""
-    from qcflow.rules import Thresholds
-
-    thr = Thresholds(repetition_lo=0.3, cps_lo=5.0, cps_hi=30.0, ppl_hi=50.0)
-    clips = spark.read.parquet(f"{clips_dir}/clips.parquet")
-    frames = {}
-    for mode in ("parquet", "persist"):
-        res = score_clips(
-            spark,
-            clips,
-            thresholds=thr,
-            check_acoustics=True,
-            slim_stage=True,
-            stage_mode=mode,
-        )
-        frames[mode] = (
-            res.scored.select(
-                "clip_id", "keep", "drop_reasons", "clip_ratio", "silence_ratio"
-            )
-            .toPandas()
-            .sort_values("clip_id")
-            .reset_index(drop=True)
-        )
-        res.release()
-    pd.testing.assert_frame_equal(frames["parquet"], frames["persist"])
-
-
 def test_write_outputs_metrics_match_spark_kernels(spark, clips_t2k, tmp_path):
     """write_outputs lands partials/lineage/metrics via the pandas
     kernels (driver-side pyarrow, 3 Spark jobs total); every written
