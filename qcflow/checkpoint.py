@@ -609,10 +609,10 @@ def _scored_from_stage(
     UDF re-run (the kernel is per-row deterministic, so staged values are
     bit-identical to a recompute; the streaming gate already relies on
     this). Byte-derived stages (PCM consistency, acoustic features) are
-    not staged — they are computed on the buckets' bytes (or, for
-    acoustic features the input already carries, read without them) and
-    hash-joined onto the narrow staged frame, same slim-join shape as
-    score_clips."""
+    not staged — they are computed on the buckets' bytes and hash-joined
+    onto the narrow staged frame, same slim-join shape as score_clips.
+    Acoustic features the input already carries (dedup survivors) ride
+    in the stage and are used as they are."""
     df = staged.filter(F.col("bucket").isin(buckets))
     extra: list = []
     if check_pcm or check_acoustics:
@@ -626,10 +626,16 @@ def _scored_from_stage(
         df = df.join(pcm, "clip_id")
         extra.append(("pcm_inconsistent", F.col("pcm_inconsistent")))
     if check_acoustics:
-        from qcflow.udfs import AUDIO_FEATURE_COLS, acoustic_features
+        from qcflow.udfs import (
+            AUDIO_FEATURE_COLS,
+            acoustic_features,
+            has_audio_features,
+        )
 
-        dec = acoustic_features(sub).select("clip_id", *AUDIO_FEATURE_COLS)
-        df = df.join(dec, "clip_id")
+        # join decoded features on only when the stage lacks them
+        if not has_audio_features(df):
+            dec = acoustic_features(sub).select("clip_id", *AUDIO_FEATURE_COLS)
+            df = df.drop(*AUDIO_FEATURE_COLS).join(dec, "clip_id")
         extra.extend(acoustic_rule_conditions())
     return scrub(apply_rules(df, thr, extra_rules=extra))
 

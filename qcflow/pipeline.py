@@ -488,16 +488,20 @@ def dedup_table(
     features into a localCheckpointed slim frame (no bytes). The band
     self-join, the connected components and the survivor choice all
     read that frame and shuffle only hashes, ids and a few doubles; the
-    cluster size and survivor come from one window per cluster. The
+    cluster size is a count over the component labels (one row per
+    member) and the survivor a min over one window per cluster. The
     survivor decision (one slim row per clip row) is BROADCAST onto the
-    clips frame, so the payload-carrying frame never shuffles. The
+    clips frame while its row-count bound (observed when the stage is
+    checkpointed) fits spark.sql.autoBroadcastJoinThreshold, so the
+    payload-carrying frame never shuffles; a larger decision takes a
+    shuffle join, which moves the payload once. The
     decision is keyed on (xxhash64(clip_id), a content hash of
     bytes/codec/sr_hz) and deduplicated on that key, so a repeated
     clip_id never multiplies rows and each copy keeps its own features.
     The graph is keyed on xxhash64(clip_id) so string ids work with the
     long-keyed CC kernel; survivor choice never depends on the hash
     (quality + lexicographic clip_id only)."""
-    from pyspark.sql import Window
+    from pyspark.sql import Observation, Window
 
     from qcflow import audio
     from qcflow.graph import connected_components
@@ -510,6 +514,7 @@ def dedup_table(
     ]
     # every clip row, its payload handed to the decode only when decodable
     # (the rest decode to NULL without their bytes crossing into Python)
+    staged = Observation()
     stage = (
         with_decode(
             clips.select(
@@ -522,38 +527,43 @@ def dedup_table(
             ["audio_fp", "snr_est_db", *AUDIO_FEATURE_COLS],
         )
         .drop("bytes", "codec", "sr_hz")
+        .observe(staged, F.count(F.lit(1)).alias("rows"))
         .localCheckpoint()
     )
     pairs = fp_pairs(stage.filter(F.col("audio_fp").isNotNull()), "nid", ham_max)
+    # cc has one row per clustered nid, so the size is an O(k) count
     cc = connected_components(pairs, src="id_a", dst="id_b").select(
-        F.col("id").alias("nid"), F.col("comp").alias("cluster_rep")
+        F.col("id").alias("nid"),
+        F.col("comp").alias("cluster_rep"),
+        F.count("*").over(Window.partitionBy("comp")).alias("cluster_size"),
     )
-    # one window per cluster; a singleton's window is its own nid, so no
-    # window partition grows with the corpus
+    # survivor: one window per cluster; a singleton's window is its own
+    # nid, so no window partition grows with the corpus
     w = Window.partitionBy(F.coalesce("cluster_rep", "nid"))
     rank = F.struct(  # quality first, then min clip_id
         (-F.coalesce(F.col("snr_est_db"), F.lit(-1e9))).alias("nq"),
         F.col("clip_id").alias("sid"),
     )
-    clustered = F.col("cluster_rep").isNotNull()
     decision = (
         stage.join(cc, "nid", "left")
-        .withColumns(
-            {
-                "cluster_size": F.when(
-                    clustered, F.size(F.collect_set("nid").over(w)).cast("long")
-                ),
-                "_survivor": F.min(rank).over(w)["sid"],
-            }
+        .withColumn("_survivor", F.min(rank).over(w)["sid"])
+        .filter(
+            F.col("cluster_rep").isNull() | (F.col("clip_id") == F.col("_survivor"))
         )
-        .filter(~clustered | (F.col("clip_id") == F.col("_survivor")))
         .select("nid", "_ch", "cluster_rep", "cluster_size", *AUDIO_FEATURE_COLS)
         .dropDuplicates(["nid", "_ch"])
     )
+    # at most one fixed-width decision row per staged row: broadcast the
+    # decision while that bound fits the session's broadcast threshold
+    conf = clips.sparkSession._jsparkSession.sessionState().conf()
+    if staged.get["rows"] * 8 * (1 + len(decision.columns)) <= (
+        conf.autoBroadcastJoinThreshold()
+    ):
+        decision = F.broadcast(decision)
     return (
         clips.drop("cluster_rep", "cluster_size", *AUDIO_FEATURE_COLS)
         .select("*", *keys)
-        .join(F.broadcast(decision), ["nid", "_ch"])
+        .join(decision, ["nid", "_ch"])
         .drop("nid", "_ch")
     )
 

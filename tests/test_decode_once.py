@@ -137,6 +137,30 @@ def test_dedup_table_decodes_once(spark, odd_table, tmp_path):
     assert _decode_evals(plans) == 1, plans
 
 
+def test_dedup_shuffle_join_equals_broadcast(spark, odd_table, tmp_path):
+    """A decision too large for the broadcast threshold takes a shuffle
+    join and yields the same survivors as the broadcast decision."""
+    path, _ = odd_table
+    clips = spark.read.parquet(path)
+    cols = ["clip_id", "cluster_rep", "cluster_size", *AUDIO_FEATURE_COLS]
+    frames = []
+
+    def survivors():
+        got = dedup_table(clips).select(*cols).toPandas()
+        frames.append(got.sort_values(cols).reset_index(drop=True))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plans = _executions(spark, survivors)
+    finally:
+        spark.conf.set(key, old)
+    assert not any("BroadcastExchange" in p for p in plans), plans
+    survivors()
+    pd.testing.assert_frame_equal(frames[0], frames[1])
+
+
 def test_score_clips_reuses_carried_features(spark, odd_table, tmp_path):
     """score_clips(check_acoustics=True) on survivors that carry the
     features runs no decode eval and never scans `bytes`, and scores
@@ -182,3 +206,39 @@ def test_payload_rewriting_stages_drop_carried_features(spark, odd_table):
     carrying = with_audio_features(spark.read.parquet(path))
     for out in (normalize_clips(carrying), segment_table(carrying)):
         assert not set(AUDIO_FEATURE_COLS) & set(out.columns), out.columns
+
+
+def test_resume_on_dedup_survivors_reuses_features(spark, odd_table, tmp_path):
+    """The dedup -> run --resume --check-acoustics chain: the staged
+    scores of dedup survivors already carry the features, so increments
+    reuse them instead of joining a second copy on. The resumed
+    kept/dropped equal the one-shot run, and a bucket replace on the
+    same input commits."""
+    from qcflow.checkpoint import merge_replace_buckets, read_committed, run_resumable
+    from qcflow.pipeline import write_outputs
+
+    path, _ = odd_table
+    dd = dedup_table(spark.read.parquet(path))
+    once = dd.groupBy("clip_id").count().filter("count = 1").select("clip_id")
+    src = str(tmp_path / "dd.parquet")
+    dd.join(once, "clip_id").write.parquet(src)
+    resumed, oneshot = str(tmp_path / "resumed"), str(tmp_path / "oneshot")
+    run_resumable(spark, src, resumed, n_buckets=4, max_buckets=2, check_acoustics=True)
+    run_resumable(spark, src, resumed, n_buckets=4, check_acoustics=True)
+    res = score_clips(spark, spark.read.parquet(src), n_buckets=4, check_acoustics=True)
+    write_outputs(res, oneshot)
+    res.release()
+
+    def pdf(df):
+        cols = sorted(c for c in df.columns if c not in ("bucket", "snapshot_id"))
+        return df.select(*cols).toPandas().sort_values("clip_id").reset_index(drop=True)
+
+    for table in ("kept", "dropped"):
+        pd.testing.assert_frame_equal(
+            pdf(read_committed(spark, resumed, table)),
+            pdf(spark.read.parquet(f"{oneshot}/{table}.parquet")),
+        )
+    n = spark.read.parquet(src).count()
+    merge_replace_buckets(spark, src, resumed, [1], n_buckets=4)
+    got = sum(read_committed(spark, resumed, t).count() for t in ("kept", "dropped"))
+    assert got == n
