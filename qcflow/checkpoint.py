@@ -20,8 +20,14 @@ are implemented over parquet with the LINEAGE table as the commit log:
   re-processing a bucket REPLACES its rows rather than duplicating them.
 - Metrics are computed from per-(snapshot, bucket) PARTIALS and merged on
   read: an increment writes only its own partial (dimension-sized), never
-  rescanning kept/dropped history. ``finalize_metrics`` materializes the
-  merged view; its plan reads partials + lineage only.
+  rescanning kept/dropped history.
+- The manifest is read on the DRIVER: lineage and partials are
+  (attempts x buckets)- and (dimension x attempts)-sized, so one pyarrow
+  read feeds ``live_pairs`` — the only place the cutoff rule is written —
+  and every reader takes its committed pair set from there. Metric reads,
+  ``finalize_metrics``, ``completed_buckets``, ``snapshots`` and vacuum's
+  manifest compaction run no Spark job; committed kept/dropped reads are
+  one broadcast semi-join of the data scan against that small pair set.
 
 Bucket = pmod(xxhash64(clip_id), n_buckets): stable across cluster sizes
 and restarts, so a manifest written at N executors resumes correctly at
@@ -51,9 +57,6 @@ from qcflow.rules import (
     derive_thresholds,
 )
 from qcflow.scrub import scrub
-from qcflow.summary import (
-    quantile_metrics,
-)
 from qcflow.features import clip_features, pcm_consistency
 from qcflow.udfs import with_langid_ppl
 
@@ -78,92 +81,67 @@ def load_thresholds(out_dir: str) -> Thresholds | None:
 
 # --------------------------------------------------------------- manifest
 
-def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = f"{out_dir}/lineage.parquet"
-    from pyspark.errors import AnalysisException
+def _has_parquet(path: str) -> bool:
+    import glob
 
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None  # first run: no manifest yet
-        raise  # corrupted/unreadable manifest must NOT mean 'reprocess all'
-
-
-def valid_pairs(
-    spark: SparkSession, out_dir: str, as_of: int | None = None
-) -> DataFrame | None:
-    """Committed (snapshot_id, bucket) pairs: every lineage row at-or-after
-    the bucket's latest 'replace' commit. Manifest-sized (attempts x
-    buckets), always broadcastable. ``as_of`` restricts the view to
-    commits with snapshot_id <= as_of — time travel: replaces AFTER the
-    cutoff have not happened yet, so the pre-replace rows are visible
-    again, exactly Iceberg's snapshot-as-of read."""
-    lin = _read_lineage(spark, out_dir)
-    if lin is None:
-        return None
-    if as_of is not None:
-        lin = lin.filter(F.col("snapshot_id") <= as_of)
-    cutoff = (
-        lin.filter(F.col("kind") == "replace")
-        .groupBy("bucket")
-        .agg(F.max("snapshot_id").alias("cut"))
-    )
-    return (
-        lin.join(F.broadcast(cutoff), "bucket", "left")
-        .filter(F.col("cut").isNull() | (F.col("snapshot_id") >= F.col("cut")))
-        .select("snapshot_id", "bucket")
-    )
+    return bool(glob.glob(f"{path}/**/*.parquet", recursive=True))
 
 
 def _lineage_pandas(out_dir: str):
     """Driver-side read of the (manifest-sized) lineage table via
-    pyarrow — the resume bookkeeping (completed buckets, snapshot
-    allocation) needs only scalars/id-lists from a table bounded by
-    attempts x buckets, and a pandas read skips two full Spark job
-    round-trips per increment (measured ~0.7 s of the r3 fixed cost).
-    Returns None when no manifest exists yet."""
-    import glob
-
+    pyarrow — a table bounded by attempts x buckets needs no Spark scan
+    (two job round-trips per read, ~0.7 s of the r3 fixed cost). Returns
+    None when no manifest exists yet."""
     path = f"{out_dir}/lineage.parquet"
-    if not glob.glob(f"{path}/**/*.parquet", recursive=True):
+    if not _has_parquet(path):
         return None
     import pandas as pd
 
     return pd.read_parquet(path)
 
 
-def _valid_pairs_local(
-    spark: SparkSession, out_dir: str
-) -> DataFrame | None:
-    """valid_pairs built from the driver-side manifest read: same cutoff
-    rule, but the (attempts x buckets)-sized pair set is computed in
-    pandas and handed to Spark as a broadcastable local relation — no
-    lineage scan job, no localCheckpoint, when several committed reads
-    share one manifest view (finalize_metrics runs once per increment,
-    so its fixed job count matters at bench scale)."""
+_PAIRS_SCHEMA = "snapshot_id long, bucket int"
+
+
+def live_pairs(out_dir: str, as_of: int | None = None):
+    """Committed (snapshot_id, bucket) pairs as a pandas frame: every
+    lineage row at-or-after its bucket's latest 'replace' commit (empty
+    when nothing is committed). ``as_of`` restricts the view to commits
+    with snapshot_id <= as_of — time travel: replaces AFTER the cutoff
+    have not happened yet, so the pre-replace rows are visible again,
+    exactly Iceberg's snapshot-as-of read. The one statement of the
+    cutoff rule; every committed reader takes its pair set from here."""
+    import pandas as pd
+
     lin = _lineage_pandas(out_dir)
-    if lin is None or not len(lin):
-        return None
+    if lin is None:
+        return pd.DataFrame(
+            {"snapshot_id": pd.Series(dtype="int64"),
+             "bucket": pd.Series(dtype="int32")}
+        )
+    if as_of is not None:
+        lin = lin[lin["snapshot_id"] <= as_of]
     rep = lin[lin["kind"] == "replace"].groupby("bucket")["snapshot_id"].max()
     cut = lin["bucket"].map(rep)
-    live = lin[cut.isna() | (lin["snapshot_id"] >= cut)][
-        ["snapshot_id", "bucket"]
-    ].drop_duplicates()
-    return spark.createDataFrame(live, "snapshot_id long, bucket int")
+    return (
+        lin[cut.isna() | (lin["snapshot_id"] >= cut)][["snapshot_id", "bucket"]]
+        .drop_duplicates()
+        .reset_index(drop=True)
+    )
+
+
+def valid_pairs(
+    spark: SparkSession, out_dir: str, as_of: int | None = None
+) -> DataFrame | None:
+    """``live_pairs`` as a Spark frame (a local relation, no scan), or
+    None when nothing is committed."""
+    live = live_pairs(out_dir, as_of)
+    return spark.createDataFrame(live, _PAIRS_SCHEMA) if len(live) else None
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
-    """Buckets with a committed lineage row at-or-after their latest
-    'replace' (the same cutoff rule as valid_pairs, evaluated on the
-    driver-side manifest)."""
-    lin = _lineage_pandas(out_dir)
-    if lin is None or not len(lin):
-        return []
-    rep = lin[lin["kind"] == "replace"].groupby("bucket")["snapshot_id"].max()
-    cut = lin["bucket"].map(rep)
-    live = lin[cut.isna() | (lin["snapshot_id"] >= cut)]
-    return sorted(int(b) for b in live["bucket"].unique())
+    """Buckets with a committed lineage row (``live_pairs``)."""
+    return sorted(int(b) for b in live_pairs(out_dir)["bucket"].unique())
 
 
 def next_snapshot_id(spark: SparkSession, out_dir: str) -> int:
@@ -229,24 +207,26 @@ def _read_table(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
         raise
 
 
-def read_committed(
-    spark: SparkSession,
-    out_dir: str,
-    table: str,
-    vp: DataFrame | None = None,
+def _committed_rows(
+    spark: SparkSession, out_dir: str, table: str, as_of: int | None
 ) -> DataFrame:
-    """Snapshot-isolated read of kept/dropped: rows whose (snapshot_id,
-    bucket) pair is committed in the manifest. Dead rows from crashed
-    attempts and pre-replace snapshots are invisible — the Iceberg
-    read-path contract over plain parquet. Pass ``vp`` (a precomputed,
-    ideally localCheckpoint'ed valid_pairs frame) when several reads
-    share one manifest view — each read otherwise re-derives it."""
     rows = _read_table(spark, out_dir, table)
-    if vp is None:
-        vp = valid_pairs(spark, out_dir)
+    vp = valid_pairs(spark, out_dir, as_of)
     if vp is None:
         return rows.limit(0)
     return rows.join(F.broadcast(vp), ["snapshot_id", "bucket"], "left_semi")
+
+
+def read_committed(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
+    """Snapshot-isolated read of kept/dropped: rows whose (snapshot_id,
+    bucket) pair is committed in the manifest. Dead rows from crashed
+    attempts and pre-replace snapshots are invisible — the Iceberg
+    read-path contract over plain parquet. The pair set comes from the
+    driver-side manifest (``live_pairs``, a pyarrow read of a
+    manifest-sized table), so each read derives its own at no job cost
+    and the plan is the data scan, one broadcast semi-join and nothing
+    else."""
+    return _committed_rows(spark, out_dir, table, None)
 
 
 def read_as_of(
@@ -260,11 +240,7 @@ def read_as_of(
     that are dead in the CURRENT view, which includes pre-replace rows a
     historical view would still need (Iceberg's expire-snapshots
     contract)."""
-    rows = _read_table(spark, out_dir, table)
-    vp = valid_pairs(spark, out_dir, as_of=snapshot_id)
-    if vp is None:
-        return rows.limit(0)
-    return rows.join(F.broadcast(vp), ["snapshot_id", "bucket"], "left_semi")
+    return _committed_rows(spark, out_dir, table, snapshot_id)
 
 
 # ---------------------------------------------------------- write attempt
@@ -272,13 +248,15 @@ def read_as_of(
 def _pa_schema(spec: list[tuple[str, str]]):
     import pyarrow as pa
 
-    m = {"long": pa.int64(), "int": pa.int32(), "string": pa.string()}
+    m = {
+        "long": pa.int64(), "int": pa.int32(),
+        "string": pa.string(), "double": pa.float64(),
+    }
     return pa.schema([(n, m[t]) for n, t in spec])
 
 
-# must match the Spark-written layout exactly (vacuum compaction and
-# legacy increments write these same tables through Spark — mixed files
-# in one directory have to merge)
+# one schema per table: every file appended into a table directory (and
+# every compaction of it) must merge with the others
 _PARTIALS_SPEC = [
     ("snapshot_id", "long"), ("kind", "string"), ("bucket", "int"),
     ("lang", "string"), ("drop_reason", "string"), ("bin", "int"),
@@ -549,7 +527,7 @@ def _stage_path(out_dir: str) -> str:
 # pays a footer + partition-discovery roundtrip (~0.2-0.3 s of every
 # increment at bench scale), and the staged table is immutable during a
 # resumable load. The two writers (_stage_scores, merge_replace_buckets)
-# invalidate explicitly.
+# replace the cached read through _stage_written.
 _STAGE_READ_CACHE: dict = {}
 
 
@@ -562,10 +540,16 @@ def _read_stage_cached(spark: SparkSession, out_dir: str) -> DataFrame:
     return df
 
 
-def _invalidate_stage_cache(out_dir: str) -> None:
+def _stage_written(spark: SparkSession, out_dir: str, schema) -> DataFrame:
+    """The read of a just-written staging table, cached for the
+    increments that follow. The writer passes the schema it wrote, so
+    the read infers none (a footer-reading Spark job per read)."""
     ap = os.path.abspath(out_dir)
     for k in [k for k in _STAGE_READ_CACHE if k[1] == ap]:
         del _STAGE_READ_CACHE[k]
+    df = spark.read.schema(schema).parquet(_stage_path(out_dir))
+    _STAGE_READ_CACHE[(id(spark), ap)] = df
+    return df
 
 
 def _stage_scores(
@@ -592,8 +576,7 @@ def _stage_scores(
     _write_clustered(
         feats.hint("rebalance", "bucket"), _stage_path(out_dir), "overwrite"
     )
-    _invalidate_stage_cache(out_dir)
-    return spark.read.parquet(_stage_path(out_dir))
+    return _stage_written(spark, out_dir, feats.schema)
 
 
 def _scored_from_stage(
@@ -610,32 +593,42 @@ def _scored_from_stage(
     bit-identical to a recompute; the streaming gate already relies on
     this). Byte-derived stages (PCM consistency, acoustic features) are
     not staged — they are computed on the buckets' bytes and hash-joined
-    onto the narrow staged frame, same slim-join shape as score_clips.
-    Acoustic features the input already carries (dedup survivors) ride
-    in the stage and are used as they are."""
+    onto the narrow staged frame. Acoustic features the input already
+    carries (dedup survivors) ride in the stage and are used as they are.
+
+    The join is row-preserving: it keys on clip_id plus a hash of the
+    input's other non-payload columns, and the staged side keeps one
+    row per key. Copies of a repeated clip_id that differ in those
+    columns match their own staged row; copies that differ only in
+    ``bytes`` staged identical rows. Either way every input row comes
+    out once, with its own byte-derived columns."""
+    from qcflow.udfs import AUDIO_FEATURE_COLS, acoustic_features, has_audio_features
+
     df = staged.filter(F.col("bucket").isin(buckets))
+    decode = check_acoustics and not has_audio_features(df)
     extra: list = []
-    if check_pcm or check_acoustics:
+    byte_cols: list[str] = []
+    if check_pcm or decode:
         sub = clips.withColumn("bucket", bucket_col(n_buckets)).filter(
             F.col("bucket").isin(buckets)
         )
+        if check_pcm:
+            sub = pcm_consistency(sub)
+            byte_cols += ["pcm_dur_ms", "pcm_inconsistent"]
+        if decode:
+            sub = acoustic_features(sub)
+            byte_cols += AUDIO_FEATURE_COLS
+        rk = F.xxhash64(*[c for c in clips.columns if c != "bytes"]).alias("_rk")
+        df = (
+            df.drop(*byte_cols)
+            .select("*", rk)
+            .dropDuplicates(["clip_id", "_rk"])
+            .join(sub.select("clip_id", rk, *byte_cols), ["clip_id", "_rk"])
+            .drop("_rk")
+        )
     if check_pcm:
-        pcm = pcm_consistency(
-            sub.select("clip_id", "bytes", "codec", "sr_hz", "dur_ms")
-        ).select("clip_id", "pcm_dur_ms", "pcm_inconsistent")
-        df = df.join(pcm, "clip_id")
         extra.append(("pcm_inconsistent", F.col("pcm_inconsistent")))
     if check_acoustics:
-        from qcflow.udfs import (
-            AUDIO_FEATURE_COLS,
-            acoustic_features,
-            has_audio_features,
-        )
-
-        # join decoded features on only when the stage lacks them
-        if not has_audio_features(df):
-            dec = acoustic_features(sub).select("clip_id", *AUDIO_FEATURE_COLS)
-            df = df.drop(*AUDIO_FEATURE_COLS).join(dec, "clip_id")
         extra.extend(acoustic_rule_conditions())
     return scrub(apply_rules(df, thr, extra_rules=extra))
 
@@ -744,136 +737,66 @@ def run_resumable(
 # ----------------------------------------------------------------- metrics
 
 # reader-side view of the long-form unified partials table: kind filter
-# plus (output key name, stored key column, output key type) — names
-# only, no Column expressions at module level (PySpark 4 needs an
-# active session)
+# plus (output key name, stored key column, output key type)
 _PARTIAL_VIEWS = {
     "drop_reasons": ("drop_reason", "drop_reason", "string"),
     "lang_conf": ("conf_bin", "bin", "int"),
     "ppl_hist": ("ppl_bin", "bin", "int"),
 }
-
-# pre-r4 layout: one table per grain, keyed by its natural column. An
-# upgraded out_dir can hold BOTH (legacy history + unified increments);
-# readers union them and vacuum migrates everything into the unified
-# table (r4 review finding: dropping the legacy guard silently orphaned
-# committed metrics history).
-_LEGACY_PARTIALS = {
-    "drop_reasons": "metrics_drop_reasons_partials",
-    "lang_conf": "metrics_lang_conf_partials",
-    "ppl_hist": "metrics_ppl_hist_partials",
-}
+_QUANTILE_SPEC = [
+    ("lang", "string"), ("ppl_p50", "double"), ("ppl_p99", "double"),
+    ("conf_p50", "double"), ("conf_p99", "double"),
+]
 
 
-def _has_parquet(path: str) -> bool:
-    import glob
-
-    return bool(glob.glob(f"{path}/**/*.parquet", recursive=True))
-
-
-def _partials_frames(
-    spark: SparkSession, out_dir: str, which: str
-) -> list[DataFrame]:
-    """(snapshot_id, bucket, lang, <dim>, n) frames for one grain, from
-    the unified table and/or the legacy per-grain table."""
-    dim, key, _ = _PARTIAL_VIEWS[which]
-    frames = []
-    uni = f"{out_dir}/metrics_partials.parquet"
-    if _has_parquet(uni):
-        frames.append(
-            spark.read.parquet(uni)
-            .filter(F.col("kind") == which)
-            .select("snapshot_id", "bucket", "lang", F.col(key).alias(dim), "n")
-        )
-    legacy = f"{out_dir}/{_LEGACY_PARTIALS[which]}.parquet"
-    if _has_parquet(legacy):
-        frames.append(
-            spark.read.parquet(legacy).select(
-                "snapshot_id", "bucket", "lang", dim, "n"
-            )
-        )
-    return frames
-
-
-def read_metrics(
-    spark: SparkSession,
-    out_dir: str,
-    which: str,
-    vp: DataFrame | None = None,
-) -> DataFrame:
-    """Merged metrics view from committed partials ONLY — the plan reads
-    the (dimension x attempts)-sized partials tables (unified + any
-    pre-r4 legacy table) and the manifest, never the kept/dropped
-    history. ``which`` is 'drop_reasons', 'lang_conf' or 'ppl_hist';
-    ``vp`` as in read_committed."""
-    if vp is None:
-        vp = valid_pairs(spark, out_dir)
+def _grain_spec(which: str) -> list[tuple[str, str]]:
     dim, _, dim_type = _PARTIAL_VIEWS[which]
-    frames = _partials_frames(spark, out_dir, which)
-    if not frames:
-        return spark.createDataFrame(
-            [], f"lang string, {dim} {dim_type}, n long"
-        )
-    partials = frames[0]
-    for fdf in frames[1:]:
-        partials = partials.unionByName(fdf)
-    if vp is not None:
-        partials = partials.join(F.broadcast(vp), ["snapshot_id", "bucket"], "left_semi")
-    return partials.groupBy("lang", dim).agg(F.sum("n").alias("n"))
+    return [("lang", "string"), (dim, dim_type), ("n", "long")]
 
 
-def read_quantile_metrics(
-    spark: SparkSession, out_dir: str, vp: DataFrame | None = None
-) -> DataFrame:
-    """Per-lang quantile metrics from the committed partials: p50/p99 of
-    perplexity (log-edge sketch) and of langid confidence (the 20-bin
-    conf histogram). The plan reads only partials + manifest; the
-    quantile walk runs on (lang x bins)-sized merged frames
-    (summary.quantile_metrics)."""
-    if vp is None:
-        vp = valid_pairs(spark, out_dir)
-    return quantile_metrics(
-        read_metrics(spark, out_dir, "ppl_hist", vp=vp),
-        read_metrics(spark, out_dir, "lang_conf", vp=vp),
+def _ddl(spec: list[tuple[str, str]]) -> str:
+    return ", ".join(f"{n} {t}" for n, t in spec)
+
+
+def _committed_partials(out_dir: str):
+    """Every grain's committed partial rows: ONE pyarrow read of the
+    (dimension x attempts)-sized partials table, filtered to
+    ``live_pairs``. None when no partials were ever written."""
+    path = f"{out_dir}/metrics_partials.parquet"
+    if not _has_parquet(path):
+        return None
+    import pandas as pd
+
+    return pd.read_parquet(path).merge(
+        live_pairs(out_dir), on=["snapshot_id", "bucket"]
     )
 
 
-def _partials_pandas(out_dir: str, which: str):
-    """Driver-side twin of _partials_frames: the unified and legacy
-    partials tables are (dimension x attempts)-sized, so pyarrow reads
-    replace Spark scans. Returns a pandas frame (snapshot_id, bucket,
-    lang, <dim>, n) or None."""
+def _merge_grain(partials, which: str):
+    """One grain's merged metrics, per (lang, <dim>) summed over the
+    committed partials (``partials`` None = no partials: empty)."""
     import pandas as pd
 
-    dim, key, _ = _PARTIAL_VIEWS[which]
-    frames = []
-    uni = f"{out_dir}/metrics_partials.parquet"
-    if _has_parquet(uni):
-        p = pd.read_parquet(uni)
-        p = p[p["kind"] == which]
-        frames.append(
-            p[["snapshot_id", "bucket", "lang", key, "n"]].rename(
-                columns={key: dim}
-            )
-        )
-    legacy = f"{out_dir}/{_LEGACY_PARTIALS[which]}.parquet"
-    if _has_parquet(legacy):
-        frames.append(
-            pd.read_parquet(legacy)[
-                ["snapshot_id", "bucket", "lang", dim, "n"]
-            ]
-        )
-    if not frames:
-        return None
-    return pd.concat(frames, ignore_index=True)
+    dim, key, dim_type = _PARTIAL_VIEWS[which]
+    if partials is None:
+        partials = pd.DataFrame(columns=[n for n, _ in _PARTIALS_SPEC])
+    p = partials[partials["kind"] == which]
+    out = (
+        p.groupby(["lang", key], dropna=False)["n"]
+        .sum()
+        .reset_index()
+        .rename(columns={key: dim})
+    )
+    out[dim] = out[dim].astype("string" if dim_type == "string" else "Int32")
+    out["n"] = out["n"].astype("int64")
+    return out
 
 
 def _hist_quantile_pandas(hist, bin_col: str, pcts: list[int]):
-    """Pandas twin of summary.hist_quantiles for one dims=['lang']
-    grouping: per lang, the smallest bin whose cumulative count reaches
-    ceil(pct * total / 100) — the identical integer-target arithmetic,
-    so the driver-side finalize emits the same bins as the Spark
-    reader (read_quantile_metrics)."""
+    """Per lang, the smallest bin whose cumulative count reaches
+    ceil(pct * total / 100) — the integer-target arithmetic of
+    summary.hist_quantiles, so driver-side quantiles equal the Spark
+    ones bin for bin."""
     out = {}
     h = hist[hist[bin_col].notna()]
     for lang, g in h.groupby("lang", dropna=False):
@@ -888,20 +811,70 @@ def _hist_quantile_pandas(hist, bin_col: str, pcts: list[int]):
     return out
 
 
+def _quantiles_pandas(partials):
+    """Per-lang p50/p99 of perplexity (log-edge sketch, upper bin edge)
+    and of langid confidence (the CONF_BINS histogram) from the
+    committed partials — summary.quantile_metrics on the driver."""
+    import numpy as np
+    import pandas as pd
+
+    from qcflow.summary import CONF_BINS, PPL_BINS_PER_OCTAVE
+
+    ppl_q = _hist_quantile_pandas(
+        _merge_grain(partials, "ppl_hist"), "ppl_bin", [50, 99]
+    )
+    conf_q = _hist_quantile_pandas(
+        _merge_grain(partials, "lang_conf"), "conf_bin", [50, 99]
+    )
+    rows = []
+    for lang in sorted(set(ppl_q) | set(conf_q)):
+        pq_, cq = ppl_q.get(lang), conf_q.get(lang)
+        rows.append(
+            {
+                "lang": lang,
+                "ppl_p50": float(
+                    np.power(2.0, (pq_["p50_bin"] + 1) / PPL_BINS_PER_OCTAVE)
+                ) if pq_ else None,
+                "ppl_p99": float(
+                    np.power(2.0, (pq_["p99_bin"] + 1) / PPL_BINS_PER_OCTAVE)
+                ) if pq_ else None,
+                "conf_p50": (cq["p50_bin"] + 1) / CONF_BINS if cq else None,
+                "conf_p99": (cq["p99_bin"] + 1) / CONF_BINS if cq else None,
+            }
+        )
+    return pd.DataFrame(rows, columns=[n for n, _ in _QUANTILE_SPEC])
+
+
+def read_metrics(spark: SparkSession, out_dir: str, which: str) -> DataFrame:
+    """Merged metrics view from committed partials ONLY: ``which`` is
+    'drop_reasons', 'lang_conf' or 'ppl_hist'. The (dimension x
+    attempts)-sized partials and the manifest are merged on the driver
+    and returned as a local relation — the plan never touches the
+    kept/dropped history, and collecting it runs no Spark job."""
+    merged = _merge_grain(_committed_partials(out_dir), which)
+    return spark.createDataFrame(merged, _ddl(_grain_spec(which)))
+
+
+def read_quantile_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Per-lang quantile metrics from the committed partials: p50/p99 of
+    perplexity (log-edge sketch) and of langid confidence (the 20-bin
+    conf histogram), computed on the driver like ``read_metrics`` — a
+    local relation, no Spark job."""
+    return spark.createDataFrame(
+        _quantiles_pandas(_committed_partials(out_dir)), _ddl(_QUANTILE_SPEC)
+    )
+
+
 def _write_table_dir(path: str, pdf, spec: list[tuple[str, str]]) -> None:
-    """Overwrite a dimension-sized metrics table driver-side: one
-    pyarrow file in a fresh directory, swapped in atomically."""
+    """Overwrite a manifest-sized table driver-side: one pyarrow file in
+    a fresh directory, swapped in atomically."""
+    import shutil
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    m = {
-        "long": pa.int64(), "int": pa.int32(),
-        "string": pa.string(), "double": pa.float64(),
-    }
-    schema = pa.schema([(n, m[t]) for n, t in spec])
+    schema = _pa_schema(spec)
     tmp = path + ".finalize"
-    import shutil
-
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     pq.write_table(
@@ -919,105 +892,27 @@ def _write_table_dir(path: str, pdf, spec: list[tuple[str, str]]) -> None:
 
 def finalize_metrics(spark: SparkSession, out_dir: str) -> None:
     """Materialize the merged metrics side tables (same schemas as
-    pipeline.write_outputs) ENTIRELY driver-side: partials and the
-    manifest are (dimension x attempts)-sized, so the committed filter,
-    the per-lang merges and the histogram-quantile walk all run in
-    pandas (same integer-target arithmetic as summary.hist_quantiles)
-    and the three tables land as pyarrow writes — zero Spark jobs (the
-    r5 fixed-cost fix: the previous three pooled read+write jobs were
-    ~2 s of the last increment at bench scale). Spark readers see the
-    identical tables; read_metrics/read_quantile_metrics remain the
-    distributed path for ad-hoc reads."""
-    import numpy as np
-    import pandas as pd
-
-    from qcflow.summary import CONF_BINS, PPL_BINS_PER_OCTAVE
-
-    lin = _lineage_pandas(out_dir)
-    if lin is None or not len(lin):
-        live = None
-    else:
-        rep = lin[lin["kind"] == "replace"].groupby("bucket")["snapshot_id"].max()
-        cut = lin["bucket"].map(rep)
-        live = lin[cut.isna() | (lin["snapshot_id"] >= cut)][
-            ["snapshot_id", "bucket"]
-        ].drop_duplicates()
-
-    def committed(p):
-        if p is None or live is None:
-            return p
-        return p.merge(live, on=["snapshot_id", "bucket"])
-
-    dr = committed(_partials_pandas(out_dir, "drop_reasons"))
-    if dr is not None:
-        out = (
-            dr.groupby(["lang", "drop_reason"], dropna=False)["n"]
-            .sum()
-            .reset_index()
-        )
-        out["n"] = out["n"].astype("int64")
+    ``read_metrics`` / ``read_quantile_metrics``) ENTIRELY driver-side:
+    the partials table and the manifest are each read once, the merges
+    and the histogram-quantile walk run in pandas, and the three tables
+    land as pyarrow writes — zero Spark jobs (the r5 fixed-cost fix: the
+    previous three pooled read+write jobs were ~2 s of the last
+    increment at bench scale). Nothing is written while no partials
+    exist."""
+    partials = _committed_partials(out_dir)
+    if partials is None:
+        return
+    for which in ("drop_reasons", "lang_conf"):
         _write_table_dir(
-            f"{out_dir}/metrics_drop_reasons.parquet",
-            out,
-            [("lang", "string"), ("drop_reason", "string"), ("n", "long")],
+            f"{out_dir}/metrics_{which}.parquet",
+            _merge_grain(partials, which),
+            _grain_spec(which),
         )
-    cf = committed(_partials_pandas(out_dir, "lang_conf"))
-    if cf is not None:
-        out = (
-            cf.groupby(["lang", "conf_bin"], dropna=False)["n"]
-            .sum()
-            .reset_index()
-        )
-        out["conf_bin"] = out["conf_bin"].astype("Int32")
-        out["n"] = out["n"].astype("int64")
-        _write_table_dir(
-            f"{out_dir}/metrics_lang_conf.parquet",
-            out,
-            [("lang", "string"), ("conf_bin", "int"), ("n", "long")],
-        )
-    pp = committed(_partials_pandas(out_dir, "ppl_hist"))
-    if pp is not None:
-        ppl_h = (
-            pp.groupby(["lang", "ppl_bin"], dropna=False)["n"].sum().reset_index()
-        )
-        ppl_q = _hist_quantile_pandas(ppl_h, "ppl_bin", [50, 99])
-        conf_h = (
-            cf.groupby(["lang", "conf_bin"], dropna=False)["n"].sum().reset_index()
-            if cf is not None
-            else pd.DataFrame(columns=["lang", "conf_bin", "n"])
-        )
-        conf_q = _hist_quantile_pandas(conf_h, "conf_bin", [50, 99])
-        langs = sorted(set(ppl_q) | set(conf_q))
-        rows = []
-        for lang in langs:
-            pq_, cq = ppl_q.get(lang), conf_q.get(lang)
-            rows.append(
-                {
-                    "lang": lang,
-                    "ppl_p50": float(
-                        np.power(2.0, (pq_["p50_bin"] + 1) / PPL_BINS_PER_OCTAVE)
-                    ) if pq_ else None,
-                    "ppl_p99": float(
-                        np.power(2.0, (pq_["p99_bin"] + 1) / PPL_BINS_PER_OCTAVE)
-                    ) if pq_ else None,
-                    "conf_p50": (cq["p50_bin"] + 1) / CONF_BINS if cq else None,
-                    "conf_p99": (cq["p99_bin"] + 1) / CONF_BINS if cq else None,
-                }
-            )
-        _write_table_dir(
-            f"{out_dir}/metrics_quantiles.parquet",
-            pd.DataFrame(
-                rows,
-                columns=[
-                    "lang", "ppl_p50", "ppl_p99", "conf_p50", "conf_p99",
-                ],
-            ),
-            [
-                ("lang", "string"), ("ppl_p50", "double"),
-                ("ppl_p99", "double"), ("conf_p50", "double"),
-                ("conf_p99", "double"),
-            ],
-        )
+    _write_table_dir(
+        f"{out_dir}/metrics_quantiles.parquet",
+        _quantiles_pandas(partials),
+        _QUANTILE_SPEC,
+    )
 
 
 # --------------------------------------------------------------- increment
@@ -1043,23 +938,14 @@ def process_increment(
         # first load: just run the resumable path
         return run_resumable(spark, clips_path, out_dir, n_buckets=n_buckets)
 
-    vp = valid_pairs(spark, out_dir)
-    if vp is None:
-        # thresholds saved but nothing ever committed (first attempt died
-        # before its commit): everything is new
-        new = clips
-    else:
-        # one manifest view shared by both committed reads (and pinned,
-        # so the broadcast build is not re-derived per branch)
-        vp = vp.localCheckpoint(eager=True)
-        seen = (
-            read_committed(spark, out_dir, "kept", vp=vp)
-            .select("clip_id")
-            .unionByName(
-                read_committed(spark, out_dir, "dropped", vp=vp).select("clip_id")
-            )
-        )
-        new = clips.join(seen, "clip_id", "left_anti")
+    # nothing committed yet (the first attempt died before its commit):
+    # the committed views are empty and everything is new
+    seen = (
+        read_committed(spark, out_dir, "kept")
+        .select("clip_id")
+        .unionByName(read_committed(spark, out_dir, "dropped").select("clip_id"))
+    )
+    new = clips.join(seen, "clip_id", "left_anti")
     res = score_clips(
         spark, new, thresholds=thr, n_buckets=n_buckets, persist_scored=False
     )
@@ -1121,17 +1007,16 @@ def merge_replace_buckets(
         feats = with_langid_ppl(
             clip_features(subset.drop("bytes")), spark
         ).withColumn("bucket", bucket_col(n_buckets))
-        kept_stage = spark.read.parquet(stage).filter(~F.col("bucket").isin(bks))
+        refreshed = (
+            spark.read.parquet(stage)
+            .filter(~F.col("bucket").isin(bks))
+            .unionByName(feats)
+        )
         tmp = stage + ".refresh"
         shutil.rmtree(tmp, ignore_errors=True)
-        _write_clustered(
-            kept_stage.unionByName(feats).hint("rebalance", "bucket"),
-            tmp,
-            "overwrite",
-        )
+        _write_clustered(refreshed.hint("rebalance", "bucket"), tmp, "overwrite")
         _swap_in(tmp, stage)
-        _invalidate_stage_cache(out_dir)  # cached reads now stale
-        staged = spark.read.parquet(stage)
+        staged = _stage_written(spark, out_dir, refreshed.schema)
         scored = _scored_from_stage(
             staged, clips, thr, n_buckets, bks, False, False
         )
@@ -1174,19 +1059,26 @@ def _swap_in(tmp: str, live: str) -> None:
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Snapshot history (Iceberg's ``table.history()``): one row per
     snapshot with its kind, bucket count and row totals, newest first.
-    Manifest-sized — never touches kept/dropped data."""
-    lin = _read_lineage(spark, out_dir)
+    Aggregated on the driver from the manifest (a local relation, no
+    Spark job); None when no manifest exists."""
+    lin = _lineage_pandas(out_dir)
     if lin is None:
         return None
-    return (
-        lin.groupBy("snapshot_id", "kind")
+    hist = (
+        lin.groupby(["snapshot_id", "kind"])
         .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum("n_input").alias("n_input"),
-            F.sum("n_kept").alias("n_kept"),
-            F.sum("n_dropped").alias("n_dropped"),
+            n_buckets=("bucket", "size"),
+            n_input=("n_input", "sum"),
+            n_kept=("n_kept", "sum"),
+            n_dropped=("n_dropped", "sum"),
         )
-        .orderBy(F.desc("snapshot_id"))
+        .reset_index()
+        .sort_values("snapshot_id", ascending=False)
+    )
+    return spark.createDataFrame(
+        hist,
+        "snapshot_id long, kind string, n_buckets long, n_input long, "
+        "n_kept long, n_dropped long",
     )
 
 
@@ -1197,14 +1089,13 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
     lineage manifest reduced to its currently-valid rows — so manifest
     and partials stay attempt-count-bounded over a long increment+replace
     history, not append-forever. The expire-snapshots / rewrite_data_files
-    analog over the local FS. kept/dropped are rewritten in the
-    ``_write_clustered`` layout, rebalanced on bucket (data-sized file
-    count, bucket-sorted files)."""
+    analog over the local FS. kept/dropped are rewritten through Spark
+    in the ``_write_clustered`` layout, rebalanced on bucket (data-sized
+    file count, bucket-sorted files); partials and lineage are
+    manifest-sized and rewritten driver-side (pyarrow), lineage last."""
     import shutil
 
     stats = {}
-    vp = valid_pairs(spark, out_dir)
-    vp = vp.localCheckpoint(eager=True) if vp is not None else None
     for table in ("kept", "dropped"):
         committed = read_committed(spark, out_dir, table).localCheckpoint(eager=True)
         stats[table] = committed.count()
@@ -1212,68 +1103,16 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
         shutil.rmtree(tmp, ignore_errors=True)
         _write_clustered(committed.hint("rebalance", "bucket"), tmp, "overwrite")
         _swap_in(tmp, f"{out_dir}/{table}.parquet")
-    if vp is None:
+    lin = _lineage_pandas(out_dir)
+    if lin is None:
         return stats
-    # metric partials: every grain (unified + any pre-r4 legacy tables)
-    # is folded into ONE compacted unified table, pruned to committed
-    # slices; legacy directories are removed afterwards — vacuum doubles
-    # as the layout migration
-    parts = []
-    for which in _PARTIAL_VIEWS:
-        dim, _, _ = _PARTIAL_VIEWS[which]
-        for fdf in _partials_frames(spark, out_dir, which):
-            if which == "drop_reasons":
-                parts.append(
-                    fdf.select(
-                        "snapshot_id",
-                        F.lit(which).alias("kind"),
-                        "bucket",
-                        "lang",
-                        F.col(dim).alias("drop_reason"),
-                        F.lit(None).cast("int").alias("bin"),
-                        "n",
-                    )
-                )
-            else:
-                parts.append(
-                    fdf.select(
-                        "snapshot_id",
-                        F.lit(which).alias("kind"),
-                        "bucket",
-                        "lang",
-                        F.lit(None).cast("string").alias("drop_reason"),
-                        F.col(dim).alias("bin"),
-                        "n",
-                    )
-                )
-    if parts:
-        uni = parts[0]
-        for fdf in parts[1:]:
-            uni = uni.unionByName(fdf)
-        live = (
-            uni.join(F.broadcast(vp), ["snapshot_id", "bucket"], "left_semi")
-            .localCheckpoint(eager=True)
+    partials = _committed_partials(out_dir)
+    if partials is not None:
+        stats["metrics_partials"] = len(partials)
+        _write_table_dir(
+            f"{out_dir}/metrics_partials.parquet", partials, _PARTIALS_SPEC
         )
-        stats["metrics_partials"] = live.count()
-        path = f"{out_dir}/metrics_partials.parquet"
-        tmp = path + ".compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        live.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            _swap_in(tmp, path)
-        else:
-            os.rename(tmp, path)
-        for name in _LEGACY_PARTIALS.values():
-            shutil.rmtree(f"{out_dir}/{name}.parquet", ignore_errors=True)
-    lin_path = f"{out_dir}/lineage.parquet"
-    lin = (
-        spark.read.parquet(lin_path)
-        .join(F.broadcast(vp), ["snapshot_id", "bucket"], "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    stats["lineage"] = lin.count()
-    tmp = lin_path + ".compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    lin.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_in(tmp, lin_path)
+    lin = lin.merge(live_pairs(out_dir), on=["snapshot_id", "bucket"])
+    stats["lineage"] = len(lin)
+    _write_table_dir(f"{out_dir}/lineage.parquet", lin, _LINEAGE_SPEC)
     return stats

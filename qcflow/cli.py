@@ -151,16 +151,14 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("qcflow-cli", cpus=args.cpus)
     t0 = time.time()
     if args.cmd == "inspect":
-        from qcflow.checkpoint import snapshots, valid_pairs
+        from qcflow.checkpoint import completed_buckets, snapshots
 
+        # manifest-sized, read on the driver: no Spark job
         snaps = snapshots(spark, args.out)
-        vp = valid_pairs(spark, args.out)
         out = {
             "cmd": "inspect",
             "snapshots": [r.asDict() for r in snaps.collect()] if snaps is not None else [],
-            "committed_buckets": (
-                vp.select("bucket").distinct().count() if vp is not None else 0
-            ),
+            "committed_buckets": len(completed_buckets(spark, args.out)),
         }
     elif args.cmd == "stream":
         from qcflow.checkpoint import load_thresholds, save_thresholds

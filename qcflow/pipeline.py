@@ -90,39 +90,37 @@ def score_clips(
     already carries (dedup_table's survivors) are reused without reading
     ``bytes``; otherwise one extra Arrow crossing decodes them.
 
-    ``slim_stage`` (acoustic decode path): stage only (clip_id,
-    decode-derived columns) to parquet and hash-join them back onto the
-    narrow text/model frame, instead of staging the FULL scored frame
-    through the (shared, variance-prone) vdisk. The decode output is 8
-    doubles a row vs the full frame's transcripts + every feature — the
-    staging write that dominated the acoustic stage's 309-1702 clips/s
-    spread shrinks ~20x (A/B measured in one session,
-    BENCH/BASELINE.md)."""
+    ``slim_stage`` (acoustic decode path): stage the decode pass's output
+    — the input's columns minus ``bytes``, plus the decoded features,
+    one row per input row — to parquet and run the text/model pass over
+    that stage, instead of staging the FULL scored frame (every text
+    feature and model output) through the (shared, variance-prone)
+    vdisk, whose write dominated the acoustic stage's 309-1702 clips/s
+    spread (A/B measured in one session, BENCH/BASELINE.md). No join
+    puts the features back, so a repeated ``clip_id`` keeps one row per
+    copy, each with its own features."""
     import tempfile
 
-    from qcflow.udfs import AUDIO_FEATURE_COLS, acoustic_features, has_audio_features
+    from qcflow.udfs import acoustic_features, has_audio_features
 
     decode = check_acoustics and not has_audio_features(clips)
     if decode and not check_pcm and slim_stage:
-        # decode pass: bytes never leave the scan stage; only the derived
-        # acoustic columns are staged
+        # decode pass: bytes never leave the scan stage
         stage_dir = tempfile.mkdtemp(prefix="qcflow_stage_")
-        acoustic_features(clips).select("clip_id", *AUDIO_FEATURE_COLS).write.mode(
-            "overwrite"
-        ).parquet(f"{stage_dir}/acoustic.parquet")
-        dec = spark.read.parquet(f"{stage_dir}/acoustic.parquet")
-
-        narrow = clips.drop("bytes").withColumn("bucket", bucket_col(n_buckets))
+        acoustic_features(clips).drop("bytes").write.mode("overwrite").parquet(
+            f"{stage_dir}/acoustic.parquet"
+        )
+        narrow = spark.read.parquet(f"{stage_dir}/acoustic.parquet").withColumn(
+            "bucket", bucket_col(n_buckets)
+        )
         # same narrow-frame de-fragmentation as the main path below
         narrow = narrow.coalesce(
             max(2 * spark.sparkContext.defaultParallelism, 1)
         )
-        narrow = with_langid_ppl(clip_features(narrow), spark)
-        df = narrow.join(dec, "clip_id")
-        # the joined frame feeds threshold derivation AND the rule pass —
+        # the model output feeds threshold derivation AND the rule pass —
         # persist it (narrow columns only; the expensive decode is
         # already materialized in the staging table)
-        df = cached = df.persist()
+        df = cached = with_langid_ppl(clip_features(narrow), spark).persist()
         thr = thresholds or derive_thresholds(df, exact=exact_thresholds)
         flagged = scrub(
             apply_rules(df, thr, extra_rules=list(acoustic_rule_conditions()))

@@ -170,14 +170,9 @@ def test_score_clips_reuses_carried_features(spark, odd_table, tmp_path):
     path, _ = odd_table
     dd = str(tmp_path / "dd.parquet")
     dedup_table(spark.read.parquet(path)).write.parquet(dd)
-    # repeated clip_ids are left out: the decode path joins features back
-    # on clip_id, which pairs every copy with every copy's features
-    once = [
-        r["clip_id"]
-        for r in spark.read.parquet(dd).groupBy("clip_id").count().collect()
-        if r["count"] == 1
-    ]
-    survivors = spark.read.parquet(dd).filter(F.col("clip_id").isin(once))
+    # repeated clip_ids included: each copy keeps its own features on
+    # both paths
+    survivors = spark.read.parquet(dd)
     thr = Thresholds(repetition_lo=0.3, cps_lo=5.0, cps_hi=30.0, ppl_hi=50.0)
     cols = ["clip_id", "keep", "drop_reasons", *AUDIO_FEATURE_COLS]
     frames = {}
@@ -187,7 +182,7 @@ def test_score_clips_reuses_carried_features(spark, odd_table, tmp_path):
         frames[name] = (
             res.scored.select(*cols)
             .toPandas()
-            .sort_values("clip_id")
+            .sort_values(cols, na_position="first")
             .reset_index(drop=True)
         )
         res.release()
@@ -242,3 +237,71 @@ def test_resume_on_dedup_survivors_reuses_features(spark, odd_table, tmp_path):
     merge_replace_buckets(spark, src, resumed, [1], n_buckets=4)
     got = sum(read_committed(spark, resumed, t).count() for t in ("kept", "dropped"))
     assert got == n
+
+
+def test_repeated_clip_id_keeps_one_row_per_copy(spark, clips_t2k, tmp_path):
+    """21 rows where one clip_id appears twice, the second copy with
+    NULL bytes: every path that joins byte-derived columns back onto
+    the text features — score_clips' slim decode path and the staged
+    resumable path with PCM consistency and acoustic features — yields
+    21 scored rows, each copy with its own features."""
+    from qcflow.checkpoint import (
+        _read_stage_cached,
+        _scored_from_stage,
+        load_thresholds,
+        read_committed,
+        run_resumable,
+    )
+    from qcflow.rules import Thresholds
+
+    base = (
+        spark.read.parquet(clips_t2k)
+        .filter(F.col("bytes").isNotNull() & (F.col("codec") == "pcm16"))
+        .orderBy("clip_id")
+        .limit(20)
+    )
+    rows = [r.asDict() for r in base.collect()]
+    dup = rows[0]["clip_id"]
+    path = str(tmp_path / "clips.parquet")
+    spark.createDataFrame(
+        rows + [{**rows[0], "bytes": None}], schema=base.schema
+    ).write.parquet(path)
+    clips = spark.read.parquet(path)
+    want = (
+        with_audio_features(clips.filter(F.col("bytes").isNotNull()))
+        .filter(F.col("clip_id") == dup)
+        .first()["ac_rms"]
+    )
+
+    def check(scored, cols=("ac_rms",)):
+        pdf = scored.select("clip_id", *cols).toPandas()
+        assert len(pdf) == 21
+        copies = pdf[pdf["clip_id"] == dup]
+        assert len(copies) == 2
+        # the NULL-bytes copy derives NULLs, the other copy its own bytes'
+        for c in cols:
+            assert copies[c].isna().sum() == 1, c
+        assert copies["ac_rms"].dropna().tolist() == [want]
+
+    thr = Thresholds(repetition_lo=0.3, cps_lo=5.0, cps_hi=30.0, ppl_hi=50.0)
+    res = score_clips(spark, clips, thresholds=thr, check_acoustics=True)
+    check(res.scored)
+    res.release()
+
+    out = str(tmp_path / "resumed")
+    run_resumable(spark, path, out, n_buckets=4, max_buckets=0)
+    staged = _read_stage_cached(spark, out)
+    thr = load_thresholds(out)
+    every = [0, 1, 2, 3]
+    check(
+        _scored_from_stage(staged, clips, thr, 4, every, True, True),
+        ("ac_rms", "pcm_dur_ms"),
+    )
+    check(_scored_from_stage(staged, clips, thr, 4, every, False, True))
+    run_resumable(spark, path, out, n_buckets=4, check_pcm=True, check_acoustics=True)
+    ids = [
+        r["clip_id"]
+        for t in ("kept", "dropped")
+        for r in read_committed(spark, out, t).select("clip_id").collect()
+    ]
+    assert len(ids) == 21 and ids.count(dup) == 2

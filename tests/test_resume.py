@@ -466,84 +466,127 @@ def test_read_committed_missing_table_is_empty(spark, tmp_path, clips_ready):
     assert read_committed(spark, out, "kept").count() > 0
 
 
-def test_driver_side_manifest_equals_spark_view(spark, tmp_path, clips_ready):
-    """completed_buckets/next_snapshot_id read the manifest via pyarrow
-    on the driver (r4 fixed-cost fix); their cutoff semantics must equal
-    the Spark valid_pairs view through an append + replace history."""
-    from qcflow.checkpoint import next_snapshot_id, valid_pairs
+# A hand-written append + replace history over buckets 0-5:
+#   0 append 0,1,2,3 | 1 append 4,5 | 2 replace 1,4 | 3 append 1 | 4 replace 0
+_HISTORY = [
+    (0, "append", 0, 10, 7, 3), (0, "append", 1, 11, 8, 3),
+    (0, "append", 2, 12, 9, 3), (0, "append", 3, 13, 10, 3),
+    (1, "append", 4, 14, 11, 3), (1, "append", 5, 15, 12, 3),
+    (2, "replace", 1, 21, 20, 1), (2, "replace", 4, 24, 20, 4),
+    (3, "append", 1, 5, 5, 0),
+    (4, "replace", 0, 30, 25, 5),
+]
 
-    out = str(tmp_path / "pdman")
-    run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS)
-    merge_replace_buckets(spark, CLIPS, out, [2, 5], n_buckets=N_BUCKETS)
 
-    vp = valid_pairs(spark, out)
-    spark_buckets = sorted(
-        r["bucket"] for r in vp.select("bucket").distinct().collect()
+def _write_history(out: str) -> None:
+    """``_HISTORY`` as a lineage table, one committed file per snapshot."""
+    from qcflow.checkpoint import _LINEAGE_PA_SCHEMA, _append_parquet_file
+
+    lin = pd.DataFrame(
+        _HISTORY,
+        columns=["snapshot_id", "kind", "bucket", "n_input", "n_kept", "n_dropped"],
     )
-    assert completed_buckets(spark, out) == spark_buckets
-    max_snap = int(vp.agg(F.max("snapshot_id")).collect()[0][0])
-    # the counter allocates strictly past everything ever written
-    assert next_snapshot_id(spark, out) > max_snap
-
-
-def test_legacy_partials_layout_reads_and_migrates(spark, tmp_path, clips_ready):
-    """A pre-r4 out_dir stores metric partials as three per-grain tables.
-    Readers must union legacy + unified (an upgraded directory holds old
-    history AND new-format increments), and vacuum must migrate
-    everything into the unified table."""
-    import os
-    import shutil
-
-    out = str(tmp_path / "legacy")
-    v1 = str(tmp_path / "legacy_v1")
-    clips = spark.read.parquet(CLIPS)
-    clips.filter(F.col("clip_id") < "clip-000000001500").write.parquet(v1)
-    run_resumable(spark, v1, out, n_buckets=N_BUCKETS)
-
-    # rewrite the unified partials into the PRE-r4 three-table layout
-    uni = spark.read.parquet(f"{out}/metrics_partials.parquet").localCheckpoint(
-        eager=True
-    )
-    uni.filter("kind = 'drop_reasons'").select(
-        "snapshot_id", "bucket", "lang", "drop_reason", "n"
-    ).write.parquet(f"{out}/metrics_drop_reasons_partials.parquet")
-    uni.filter("kind = 'lang_conf'").select(
-        "snapshot_id", "bucket", "lang", F.col("bin").alias("conf_bin"), "n"
-    ).write.parquet(f"{out}/metrics_lang_conf_partials.parquet")
-    uni.filter("kind = 'ppl_hist'").select(
-        "snapshot_id", "bucket", "lang", F.col("bin").alias("ppl_bin"), "n"
-    ).write.parquet(f"{out}/metrics_ppl_hist_partials.parquet")
-    shutil.rmtree(f"{out}/metrics_partials.parquet")
-
-    # an increment under the NEW code appends unified-format partials;
-    # the merged view must cover old (legacy) + new (unified) history
-    process_increment(spark, CLIPS, out, n_buckets=N_BUCKETS)
-    dropped = read_committed(spark, out, "dropped")
-    scratch = (
-        dropped.select(
-            "lang", F.explode(F.split("drop_reasons", ",")).alias("drop_reason")
+    for snap, rows in lin.groupby("snapshot_id"):
+        _append_parquet_file(
+            f"{out}/lineage.parquet", rows, _LINEAGE_PA_SCHEMA, f"snap{snap:010d}"
         )
-        .groupBy("lang", "drop_reason")
-        .agg(F.count("*").alias("n"))
-        .toPandas()
-    )
-    merged = read_metrics(spark, out, "drop_reasons").toPandas()
-    key = ["lang", "drop_reason"]
-    pd.testing.assert_frame_equal(
-        merged.sort_values(key).reset_index(drop=True),
-        scratch.sort_values(key).reset_index(drop=True),
-    )
 
-    # vacuum migrates: legacy dirs gone, unified holds the whole view
-    vacuum(spark, out)
-    assert not os.path.exists(f"{out}/metrics_drop_reasons_partials.parquet")
-    assert not os.path.exists(f"{out}/metrics_lang_conf_partials.parquet")
-    assert not os.path.exists(f"{out}/metrics_ppl_hist_partials.parquet")
-    after = read_metrics(spark, out, "drop_reasons").toPandas()
-    pd.testing.assert_frame_equal(
-        after.sort_values(key).reset_index(drop=True),
-        scratch.sort_values(key).reset_index(drop=True),
+
+def test_live_pairs_over_append_replace_history(spark, tmp_path):
+    """The cutoff rule — a bucket's rows count from its latest 'replace'
+    on — over a hand-written history, now and as of earlier snapshots;
+    completed_buckets, valid_pairs and next_snapshot_id read the same
+    manifest."""
+    from qcflow.checkpoint import live_pairs, next_snapshot_id, valid_pairs
+
+    out = str(tmp_path / "manifest")
+
+    def pairs(df):
+        return sorted(
+            (int(r.snapshot_id), int(r.bucket)) for r in df.itertuples()
+        )
+
+    assert pairs(live_pairs(out)) == []
+    assert valid_pairs(spark, out) is None
+    assert completed_buckets(spark, out) == []
+    _write_history(out)
+    assert pairs(live_pairs(out)) == [
+        (0, 2), (0, 3), (1, 5), (2, 1), (2, 4), (3, 1), (4, 0),
+    ]
+    # before the bucket-0 replace, and before any replace
+    assert pairs(live_pairs(out, as_of=3)) == [
+        (0, 0), (0, 2), (0, 3), (1, 5), (2, 1), (2, 4), (3, 1),
+    ]
+    assert pairs(live_pairs(out, as_of=1)) == [
+        (0, 0), (0, 1), (0, 2), (0, 3), (1, 4), (1, 5),
+    ]
+    assert pairs(live_pairs(out, as_of=0)) == [(0, 0), (0, 1), (0, 2), (0, 3)]
+    assert pairs(valid_pairs(spark, out, as_of=3).toPandas()) == pairs(
+        live_pairs(out, as_of=3)
     )
+    assert completed_buckets(spark, out) == [0, 1, 2, 3, 4, 5]
+    # the counter allocates strictly past everything ever written
+    assert next_snapshot_id(spark, out) == 5
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn`` submits from this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_metric_reads_run_no_spark_jobs(spark, tmp_path, clips_ready):
+    """Merged metric reads are merged on the driver from the
+    manifest-sized partials: collecting them submits no Spark job."""
+    from qcflow.checkpoint import read_quantile_metrics
+
+    out = str(tmp_path / "nojobs")
+    run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS, max_buckets=3)
+    merge_replace_buckets(spark, CLIPS, out, [0], n_buckets=N_BUCKETS)
+    for which in ("drop_reasons", "lang_conf", "ppl_hist"):
+        rows = []
+        assert _jobs(spark, lambda: rows.extend(read_metrics(spark, out, which).collect())) == 0
+        assert rows, which
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(read_quantile_metrics(spark, out).collect())) == 0
+    assert rows
+
+
+def test_inspect_reads_manifest_without_jobs(spark, tmp_path, capsys):
+    """`qcflow inspect` on an append + replace history: the JSON is
+    pinned, and printing it submits no Spark job."""
+    import json
+
+    from qcflow import cli
+
+    out = str(tmp_path / "inspect")
+    _write_history(out)
+    assert _jobs(spark, lambda: cli.main(["inspect", "--out", out])) == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    del got["sec"]
+    snap = ["snapshot_id", "kind", "n_buckets", "n_input", "n_kept", "n_dropped"]
+    assert got == {
+        "cmd": "inspect",
+        "snapshots": [
+            dict(zip(snap, r))
+            for r in [
+                (4, "replace", 1, 30, 25, 5),
+                (3, "append", 1, 5, 5, 0),
+                (2, "replace", 2, 45, 40, 5),
+                (1, "append", 2, 29, 23, 6),
+                (0, "append", 4, 46, 34, 12),
+            ]
+        ],
+        "committed_buckets": 6,
+    }
 
 
 def test_staged_scores_exist_and_legacy_fallback(spark, tmp_path, clips_ready):
