@@ -6,18 +6,24 @@ are implemented over parquet with the LINEAGE table as the commit log:
 
 - Every write attempt gets a ``snapshot_id`` (monotonic long). Data rows
   in kept/dropped and the metrics PARTIALS carry it as a column.
-- An attempt's appends (kept -> dropped -> partials) become visible only
-  when its lineage rows land — the lineage append IS the commit, exactly
-  Iceberg's snapshot-commit discipline. A crash before the lineage append
-  leaves dead rows that no committed-view reader ever sees, and the
-  bucket is simply reprocessed under a new snapshot_id on resume: no
-  dedup pass, no orphan cleanup needed for correctness (``vacuum``
-  physically drops dead rows, like expire-snapshots).
+- An attempt's appends (kept and dropped, then partials) become
+  visible only when its lineage rows land — the lineage append IS the
+  commit, exactly Iceberg's snapshot-commit discipline. A crash before
+  the lineage append leaves dead rows that no committed-view reader
+  ever sees, and the bucket is simply reprocessed under a new
+  snapshot_id on resume: no dedup pass, no orphan cleanup needed for
+  correctness (``vacuum`` physically drops dead rows, like
+  expire-snapshots).
 - Lineage rows are (snapshot_id, kind, bucket, n_input, n_kept,
   n_dropped) with kind in {'append', 'replace'}. The committed view of a
   bucket is every (snapshot_id, bucket) pair at-or-after the bucket's
   latest 'replace' commit — so ``merge_replace_buckets`` is MERGE-shaped:
   re-processing a bucket REPLACES its rows rather than duplicating them.
+- Every commit — a one-shot ``write_outputs`` run, a resumable
+  increment, a snapshot-diff increment, a bucket replace — runs through
+  ONE function, ``_write_attempt``: three concurrent Spark jobs over a
+  frame its caller has materialized (or a bucket-filtered scan of the
+  staging table), then the partials and lineage written driver-side.
 - Metrics are computed from per-(snapshot, bucket) PARTIALS and merged on
   read: an increment writes only its own partial (dimension-sized), never
   rescanning kept/dropped history.
@@ -27,7 +33,8 @@ are implemented over parquet with the LINEAGE table as the commit log:
   and every reader takes its committed pair set from there. Metric reads,
   ``finalize_metrics``, ``completed_buckets``, ``snapshots`` and vacuum's
   manifest compaction run no Spark job; committed kept/dropped reads are
-  one broadcast semi-join of the data scan against that small pair set.
+  one broadcast semi-join of the data scan against that small pair set,
+  with the data schema read from one file's footer (no inference job).
 
 Bucket = pmod(xxhash64(clip_id), n_buckets): stable across cluster sizes
 and restarts, so a manifest written at N executors resumes correctly at
@@ -40,7 +47,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from qcflow.pipeline import (
@@ -170,10 +177,10 @@ def next_snapshot_id(spark: SparkSession, out_dir: str) -> int:
 
 
 # Committed-table schemas, for the empty view when a table directory is
-# missing or holds only a _SUCCESS marker (e.g. a table that was never
-# written or was removed: spark.read.parquet would fail with
-# UNABLE_TO_INFER_SCHEMA). Must match pipeline.KEEP_COLS / DROP_COLS +
-# snapshot_id.
+# missing or holds no data file (e.g. a table that was never written or
+# was removed). Must match pipeline.KEEP_COLS / DROP_COLS + snapshot_id.
+# Only the empty view uses them: kept's sr_hz/dur_ms types follow the
+# input clips, so a non-empty table takes its schema from its files.
 _TABLE_SCHEMAS = {
     "kept": (
         "clip_id string, bucket int, sr_hz int, dur_ms int, codec string, "
@@ -188,23 +195,25 @@ _TABLE_SCHEMAS = {
 
 
 def _read_table(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
-    """Read a manifest data table; a never-written table (missing dir or
-    no data files) is a valid EMPTY committed view, not an error."""
-    from pyspark.errors import AnalysisException
+    """Read a flat manifest data table with the schema of one data
+    file's footer (a driver-side pyarrow read), so building the read
+    runs no schema-inference Spark job. A never-written table (missing
+    dir or no data files) is a valid EMPTY committed view, not an
+    error."""
+    import glob
 
-    try:
-        return spark.read.parquet(f"{out_dir}/{table}.parquet")
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            schema = _TABLE_SCHEMAS.get(table)
-            if schema is not None:
-                return spark.createDataFrame([], schema)
-        raise
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = f"{out_dir}/{table}.parquet"
+    files = sorted(
+        f for f in glob.glob(f"{path}/*.parquet")
+        if not os.path.basename(f).startswith(("_", "."))
+    )
+    if not files:
+        return spark.createDataFrame([], _TABLE_SCHEMAS[table])
+    schema = from_arrow_schema(pq.read_schema(files[0]))
+    return spark.read.schema(schema).parquet(path)
 
 
 def _committed_rows(
@@ -245,16 +254,6 @@ def read_as_of(
 
 # ---------------------------------------------------------- write attempt
 
-def _pa_schema(spec: list[tuple[str, str]]):
-    import pyarrow as pa
-
-    m = {
-        "long": pa.int64(), "int": pa.int32(),
-        "string": pa.string(), "double": pa.float64(),
-    }
-    return pa.schema([(n, m[t]) for n, t in spec])
-
-
 # one schema per table: every file appended into a table directory (and
 # every compaction of it) must merge with the others
 _PARTIALS_SPEC = [
@@ -268,27 +267,26 @@ _LINEAGE_SPEC = [
 ]
 
 
-def _PARTIALS_PA_SCHEMA():
-    return _pa_schema(_PARTIALS_SPEC)
-
-
-def _LINEAGE_PA_SCHEMA():
-    return _pa_schema(_LINEAGE_SPEC)
-
-
-def _append_parquet_file(dir_path: str, pdf, schema_fn, name: str) -> None:
-    """Driver-side append of one file into a Spark-readable parquet
-    directory: write to a SIBLING temp path, then atomically rename into
-    the directory — a crash mid-write never leaves a half file where a
-    reader could list it (stronger than Spark's own job-commit, and no
-    cluster roundtrip for dimension-sized bookkeeping data)."""
+def _append_parquet_file(
+    dir_path: str, pdf, spec: list[tuple[str, str]], name: str
+) -> None:
+    """Driver-side append of one file (the table's ``spec`` schema) into
+    a Spark-readable parquet directory: write to a SIBLING temp path,
+    then atomically rename into the directory — a crash mid-write never
+    leaves a half file where a reader could list it (stronger than
+    Spark's own job-commit, and no cluster roundtrip for
+    dimension-sized bookkeeping data)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    types = {
+        "long": pa.int64(), "int": pa.int32(),
+        "string": pa.string(), "double": pa.float64(),
+    }
+    schema = pa.schema([(n, types[t]) for n, t in spec])
     os.makedirs(dir_path, exist_ok=True)
-    schema = schema_fn()
     table = pa.Table.from_pandas(
-        pdf[[f.name for f in schema]], schema=schema, preserve_index=False
+        pdf[[n for n, _ in spec]], schema=schema, preserve_index=False
     )
     tmp = f"{dir_path}.__tmp-{name}"
     pq.write_table(table, tmp, compression="snappy")
@@ -369,14 +367,15 @@ def _split_grains_pandas(gpdf, snapshot_id: int):
     pp["bin"] = pp["bin"].astype("Int32")
 
     cols = ["kind", "bucket", "lang", "drop_reason", "bin", "n"]
+    if not (len(dr) + len(cf) + len(pp)):
+        return pd.DataFrame({n: [] for n, _ in _PARTIALS_SPEC}), {}
     partials = pd.concat(
         [d[cols] for d in (dr, cf, pp) if len(d)], ignore_index=True
-    ) if (len(dr) + len(cf) + len(pp)) else pd.DataFrame(columns=cols)
-    if len(partials):
-        partials.insert(0, "snapshot_id", np.int64(snapshot_id))
-        partials["bucket"] = partials["bucket"].astype("int32")
-        partials["bin"] = partials["bin"].astype("Int32")
-        partials["n"] = partials["n"].astype("int64")
+    )
+    partials.insert(0, "snapshot_id", np.int64(snapshot_id))
+    partials["bucket"] = partials["bucket"].astype("int32")
+    partials["bin"] = partials["bin"].astype("Int32")
+    partials["n"] = partials["n"].astype("int64")
 
     lin = (
         cube.groupby("bucket", dropna=False)
@@ -399,124 +398,75 @@ def _write_attempt(
     kind: str,
     all_buckets: list[int] | None = None,
     stage_backed: bool = False,
-) -> DataFrame:
-    """Append one attempt's kept/dropped rows + metric partials, then
-    commit it with the lineage append (strictly last — the commit point).
-    ``all_buckets`` forces a lineage row for every listed bucket even if
-    it produced zero rows, so sparse inputs still mark buckets complete
-    and resume stays a no-op. Returns the committed lineage rows.
+):
+    """The one commit path (one-shot runs, resumable increments,
+    snapshot-diff increments and bucket replaces): append one attempt's
+    kept/dropped rows + metric partials, then commit it with the lineage
+    append (strictly last — the commit point). ``all_buckets`` forces a
+    lineage row for every listed bucket even if it produced zero rows,
+    so sparse inputs still mark buckets complete and resume stays a
+    no-op. Returns the committed lineage rows as a pandas frame.
 
-    Data layout: kept/dropped land through ``_write_clustered`` — one
-    flat, bucket-sorted file per writer task, where the writer tasks are
-    the staged scan's own tasks (stage-backed) or the bucket
-    repartition of the persisted frame.
+    The CALLER materializes ``scored``; this function never does.
+    ``stage_backed`` says the plan is pure column expressions over a
+    bucket-filtered scan of the staging table: each of the three jobs
+    recomputes that narrow scan (cheaper than materializing it — a
+    persist plus bucket shuffle cost ~0.5 s of each increment at bench
+    scale), and kept/dropped are written from the scan's own tasks with
+    no shuffle. Otherwise ``scored`` must already
+    be materialized (score_clips' persist or parquet stage, or a
+    caller's localCheckpoint), and kept/dropped go through a rebalance
+    on bucket, so AQE sizes the writer-task count to the data. Either
+    way rows land through ``_write_clustered``: one flat, bucket-sorted
+    file per writer task.
 
-    Fixed-cost shape (r4 + r5 resumable-increment fixes — this path runs
-    once per increment, so job count matters as much as row count): the
-    increment runs exactly THREE Spark jobs — kept write, dropped write,
-    and ONE collect of the grouping-sets grains frame (both metric
-    grains + lineage counts in one shuffle, dimension-sized) — all
-    submitted concurrently when stage-backed. Partials and the lineage
-    commit are then split in pandas and written DRIVER-SIDE via pyarrow
-    (atomic rename into the table directories): the former
-    localCheckpoint job + coalesced partials write + lineage
-    local-relation write were ~1.4 s of each increment's ~2.4 s at
-    bench scale, 3x the actual data writes."""
-    import pandas as pd
-
-    spark = scored.sparkSession
-    snap = F.lit(snapshot_id).cast("long").alias("snapshot_id")
-    if stage_backed:
-        # rows come from the bucket-clustered staging table: each scan
-        # task of the bucket-filtered stage read writes its own one file
-        # per table (_write_clustered) with no shuffle, and the plan
-        # above them is a filtered narrow scan + codegen'd rules/scrub —
-        # cheaper to recompute per output than to persist (the persist
-        # materialization + bucket shuffle were ~0.5 s of each
-        # increment's fixed cost at bench scale).
-        staged = scored
-    else:
-        staged = scored.repartition("bucket").persist()
-    kept = staged.filter(F.col("keep")).select(*KEEP_COLS, snap)
-    dropped = staged.filter(~F.col("keep")).select(*DROP_COLS, snap)
-    # The kept write materializes the staged cache; everything after it
-    # is latency-bound reads of that cache (or of the checkpointed
-    # metrics grains), so the remaining jobs run from a thread pool.
-    # metric partials, keyed by (snapshot_id, bucket) so a later bucket
-    # replace invalidates exactly the right slice on read; all partials
-    # AND the lineage counts derive from ONE grouping-sets aggregate over
-    # the staged frame (both grains, one shuffle) — which is
-    # dimension-sized, so it is COLLECTED and split driver-side, and the
-    # partials + lineage land as pyarrow-written files (no Spark jobs):
-    # the r5 fixed-cost fix — the checkpoint job + coalesced partials
-    # write were ~1.4 s of each increment, 3x the data writes. The
-    # perplexity grain is the fixed log-edge quantile sketch —
-    # sum-mergeable, so per-lang p50/p99 never rescan history OR buffer
-    # a hot language's raw values on one reducer (the exact-percentile
-    # skew anti-pattern, BENCH/BASELINE.md 5.6x lesson).
+    Fixed-cost shape (this path runs once per increment, so job count
+    matters as much as row count): exactly THREE Spark jobs, submitted
+    concurrently — kept write, dropped write, and ONE collect of the
+    grouping-sets grains frame (both metric grains + lineage counts in
+    one shuffle, dimension-sized at any corpus size). Partials and the
+    lineage commit are split in pandas (row-identical to the Spark
+    aggregations in qcflow.summary, pinned by tests) and written
+    DRIVER-SIDE via pyarrow with an atomic rename into the table
+    directories. The partials file is appended even when empty, so an
+    empty input still leaves a schema-complete partials table. The
+    perplexity grain is the fixed log-edge quantile sketch —
+    sum-mergeable, so per-lang p50/p99 never rescan history OR buffer a
+    hot language's raw values on one reducer."""
     from concurrent.futures import ThreadPoolExecutor
+
+    import pandas as pd
 
     from qcflow.summary import grains_frame
 
-    def _kept_write():
-        _write_clustered(kept, f"{out_dir}/kept.parquet")
-
-    def _dropped_write():
-        _write_clustered(dropped, f"{out_dir}/dropped.parquet")
-
-    def _grains_collect():
-        return grains_frame(staged).toPandas()
-
-    if stage_backed:
-        # three independent recomputes of the filtered narrow scan — all
-        # submitted at once (no cache to race on)
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            futs = [
-                ex.submit(_kept_write),
-                ex.submit(_dropped_write),
-                ex.submit(_grains_collect),
-            ]
-            _, _, gpdf = [f.result() for f in futs]
-    else:
-        # the kept write materializes the persisted cache first; the
-        # remaining actions read it
-        _kept_write()
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = [ex.submit(_dropped_write), ex.submit(_grains_collect)]
-            _, gpdf = [f.result() for f in futs]
-        staged.unpersist()
+    snap = F.lit(snapshot_id).cast("long").alias("snapshot_id")
+    kept = scored.filter(F.col("keep")).select(*KEEP_COLS, snap)
+    dropped = scored.filter(~F.col("keep")).select(*DROP_COLS, snap)
+    if not stage_backed:
+        kept = kept.hint("rebalance", "bucket")
+        dropped = dropped.hint("rebalance", "bucket")
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        futs = [
+            ex.submit(_write_clustered, kept, f"{out_dir}/kept.parquet"),
+            ex.submit(_write_clustered, dropped, f"{out_dir}/dropped.parquet"),
+            ex.submit(lambda: grains_frame(scored).toPandas()),
+        ]
+        _, _, gpdf = [f.result() for f in futs]
 
     partials, by_bucket = _split_grains_pandas(gpdf, snapshot_id)
-    if len(partials):
-        _append_parquet_file(
-            f"{out_dir}/metrics_partials.parquet",
-            partials,
-            _PARTIALS_PA_SCHEMA,
-            f"snap{snapshot_id:010d}",
-        )
-    buckets = sorted(
-        set(by_bucket) | {int(b) for b in (all_buckets or [])}
+    tag = f"snap{snapshot_id:010d}"
+    _append_parquet_file(
+        f"{out_dir}/metrics_partials.parquet", partials, _PARTIALS_SPEC, tag
     )
-    rows = [
-        (snapshot_id, kind, b, *by_bucket.get(b, (0, 0, 0))) for b in buckets
-    ]
-    lin_pdf = pd.DataFrame(
-        rows,
-        columns=[
-            "snapshot_id", "kind", "bucket", "n_input", "n_kept", "n_dropped",
-        ],
+    buckets = sorted(set(by_bucket) | {int(b) for b in (all_buckets or [])})
+    lin = pd.DataFrame(
+        [(snapshot_id, kind, b, *by_bucket.get(b, (0, 0, 0))) for b in buckets],
+        columns=[n for n, _ in _LINEAGE_SPEC],
     )
     _append_parquet_file(  # COMMIT (atomic rename into the dir, last)
-        f"{out_dir}/lineage.parquet",
-        lin_pdf,
-        _LINEAGE_PA_SCHEMA,
-        f"snap{snapshot_id:010d}",
+        f"{out_dir}/lineage.parquet", lin, _LINEAGE_SPEC, tag
     )
-    return spark.createDataFrame(
-        lin_pdf,
-        "snapshot_id long, kind string, bucket int, "
-        "n_input long, n_kept long, n_dropped long",
-    )
+    return lin
 
 
 def _stage_path(out_dir: str) -> str:
@@ -552,6 +502,21 @@ def _stage_written(spark: SparkSession, out_dir: str, schema) -> DataFrame:
     return df
 
 
+def _text_scores(clips: DataFrame, n_buckets: int) -> DataFrame:
+    """The staged columns: ``clips`` minus ``bytes``, plus the text
+    features, the langid/perplexity outputs and ``bucket``. The
+    payload-sized scan splits are merged before the narrow UDF pass
+    (same de-fragmentation as score_clips: splits are tuned to the
+    pruned-away bytes column)."""
+    spark = clips.sparkSession
+    narrow = clips.drop("bytes").coalesce(
+        max(2 * spark.sparkContext.defaultParallelism, 1)
+    )
+    return with_langid_ppl(clip_features(narrow), spark).withColumn(
+        "bucket", bucket_col(n_buckets)
+    )
+
+
 def _stage_scores(
     clips: DataFrame, out_dir: str, n_buckets: int
 ) -> DataFrame:
@@ -563,20 +528,19 @@ def _stage_scores(
     bucket-sorted (``_write_clustered``), so later bucket-filtered reads
     skip row groups by the column's min/max statistics. Returns the
     read-back staged frame."""
-    spark = clips.sparkSession
-    # merge the payload-sized scan splits before the narrow UDF pass
-    # (same de-fragmentation as score_clips: splits are tuned to the
-    # pruned-away bytes column)
-    narrow = clips.drop("bytes").coalesce(
-        max(2 * spark.sparkContext.defaultParallelism, 1)
-    )
-    feats = with_langid_ppl(
-        clip_features(narrow), spark
-    ).withColumn("bucket", bucket_col(n_buckets))
+    feats = _text_scores(clips, n_buckets)
     _write_clustered(
         feats.hint("rebalance", "bucket"), _stage_path(out_dir), "overwrite"
     )
-    return _stage_written(spark, out_dir, feats.schema)
+    return _stage_written(clips.sparkSession, out_dir, feats.schema)
+
+
+def _decodes(staged: DataFrame, check_acoustics: bool) -> bool:
+    """Whether the acoustic rules need features the stage does not carry
+    (dedup survivors carry them), i.e. a decode of the clips' bytes."""
+    from qcflow.udfs import has_audio_features
+
+    return check_acoustics and not has_audio_features(staged)
 
 
 def _scored_from_stage(
@@ -602,10 +566,10 @@ def _scored_from_stage(
     columns match their own staged row; copies that differ only in
     ``bytes`` staged identical rows. Either way every input row comes
     out once, with its own byte-derived columns."""
-    from qcflow.udfs import AUDIO_FEATURE_COLS, acoustic_features, has_audio_features
+    from qcflow.udfs import AUDIO_FEATURE_COLS, acoustic_features
 
     df = staged.filter(F.col("bucket").isin(buckets))
-    decode = check_acoustics and not has_audio_features(df)
+    decode = _decodes(staged, check_acoustics)
     extra: list = []
     byte_cols: list[str] = []
     if check_pcm or decode:
@@ -653,14 +617,22 @@ def run_resumable(
     scores (r4 judge finding #1): increments read the staged table and
     apply rules+scrub only, so the langid/perplexity UDF runs ~1x over
     the input across the whole resumable run instead of 2x (derive +
-    per-increment re-score). The input is assumed immutable for the
+    per-increment re-score). A directory with saved thresholds but no
+    stage (a ``qcflow run`` output, or one written before the stage
+    existed) is staged the same way before its first increment, and
+    keeps its thresholds. The input is assumed immutable for the
     duration of a resumable load (same contract as the manifest's
     bucket hashing); corrections go through merge_replace_buckets,
-    which refreshes the staged rows it replaces."""
+    which refreshes the staged rows it replaces.
+
+    An increment that joins byte-derived columns (``check_pcm``, or
+    acoustic features the stage does not carry) localCheckpoints the
+    joined frame once, so its decode runs once; every other increment
+    commits stage-backed (see ``_write_attempt``)."""
     # the clips frame is only analyzed when a path actually needs the
-    # bytes (first-attempt staging, byte-derived checks, legacy
-    # fallback): a parquet read costs a footer/listing roundtrip that a
-    # stage-backed increment should not pay
+    # bytes (staging, byte-derived checks): a parquet read costs a
+    # footer/listing roundtrip that a stage-backed increment should not
+    # pay
     clips = None
 
     def _clips() -> DataFrame:
@@ -684,51 +656,31 @@ def run_resumable(
     todo = sorted(set(range(n_buckets)) - done)
     if max_buckets is not None:
         todo = todo[:max_buckets]
+    remaining = n_buckets - len(done) - len(todo)
     if not todo:
-        return {"processed_buckets": 0, "remaining": 0}
+        return {"processed_buckets": 0, "remaining": remaining}
 
     if _has_parquet(_stage_path(out_dir)):
         staged = _read_stage_cached(spark, out_dir)
-        scored = _scored_from_stage(
-            staged,
-            _clips() if (check_pcm or check_acoustics) else None,
-            thr,
-            n_buckets,
-            todo,
-            check_pcm,
-            check_acoustics,
-        )
-        snap = next_snapshot_id(spark, out_dir)
-        # stage_backed (shuffle/persist-free) only when the plan is pure
-        # column exprs over the pruned staged scan — a byte stage join
-        # would re-run its decode crossing per output otherwise
-        _write_attempt(
-            scored,
-            out_dir,
-            snap,
-            "append",
-            all_buckets=todo,
-            stage_backed=not (check_pcm or check_acoustics),
-        )
     else:
-        # legacy out_dir (thresholds saved by a pre-stage version, no
-        # staged scores): fall back to re-scoring the subset
-        subset = _clips().withColumn("bucket", bucket_col(n_buckets)).filter(
-            F.col("bucket").isin(todo)
-        ).drop("bucket")
-        res = score_clips(
-            spark,
-            subset,
-            thresholds=thr,
-            n_buckets=n_buckets,
-            check_pcm=check_pcm,
-            check_acoustics=check_acoustics,
-            persist_scored=False,  # _write_attempt's bucket-staged persist is the one materialization
-        )
-        snap = next_snapshot_id(spark, out_dir)
-        _write_attempt(res.scored, out_dir, snap, "append", all_buckets=todo)
-        res.release()
-    remaining = n_buckets - len(done) - len(todo)
+        staged = _stage_scores(_clips(), out_dir, n_buckets)
+    byte_joined = check_pcm or _decodes(staged, check_acoustics)
+    scored = _scored_from_stage(
+        staged,
+        _clips() if byte_joined else None,
+        thr,
+        n_buckets,
+        todo,
+        check_pcm,
+        check_acoustics,
+    )
+    if byte_joined:
+        scored = scored.localCheckpoint(eager=True)
+    snap = next_snapshot_id(spark, out_dir)
+    _write_attempt(
+        scored, out_dir, snap, "append", all_buckets=todo,
+        stage_backed=not byte_joined,
+    )
     if remaining == 0:
         finalize_metrics(spark, out_dir)
     return {"processed_buckets": len(todo), "remaining": remaining}
@@ -870,20 +822,9 @@ def _write_table_dir(path: str, pdf, spec: list[tuple[str, str]]) -> None:
     a fresh directory, swapped in atomically."""
     import shutil
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = _pa_schema(spec)
     tmp = path + ".finalize"
     shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    pq.write_table(
-        pa.Table.from_pandas(
-            pdf[[n for n, _ in spec]], schema=schema, preserve_index=False
-        ),
-        os.path.join(tmp, "part-00000.parquet"),
-        compression="snappy",
-    )
+    _append_parquet_file(tmp, pdf, spec, "00000")
     if os.path.exists(path):
         _swap_in(tmp, path)
     else:
@@ -945,23 +886,27 @@ def process_increment(
         .select("clip_id")
         .unionByName(read_committed(spark, out_dir, "dropped").select("clip_id"))
     )
-    new = clips.join(seen, "clip_id", "left_anti")
-    res = score_clips(
-        spark, new, thresholds=thr, n_buckets=n_buckets, persist_scored=False
+    # The new rows' plan READS kept/dropped (the anti-join) and we are
+    # about to APPEND to them — materialize and cut the lineage first, or
+    # the later actions re-evaluate against their own output
+    # (self-referential read-modify-write). The cut is taken on the
+    # payload-free input, before scoring; the count rides on the same job.
+    # On a cluster use checkpoint(); local is fine here.
+    rows = Observation()
+    new = (
+        clips.drop("bytes")
+        .join(seen, "clip_id", "left_anti")
+        .observe(rows, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
     )
-    # The scored plan READS kept/dropped (the anti-join) and we are about to
-    # APPEND to them — materialize and cut the lineage first, or the later
-    # actions re-evaluate against their own output (self-referential
-    # read-modify-write). On a cluster use checkpoint(); local is fine here.
-    scored = res.scored.localCheckpoint(eager=True)
-    res.release()
-    n_new = scored.count()
+    n_new = int(rows.get["n"])
     if n_new:
+        res = score_clips(spark, new, thresholds=thr, n_buckets=n_buckets)
         snap = next_snapshot_id(spark, out_dir)
-        _write_attempt(scored, out_dir, snap, "append")
-    scored.unpersist()
+        _write_attempt(res.scored, out_dir, snap, "append")
+        res.release()
     finalize_metrics(spark, out_dir)
-    return {"n_new": int(n_new)}
+    return {"n_new": n_new}
 
 
 # ------------------------------------------------------------ MERGE upsert
@@ -980,9 +925,10 @@ def merge_replace_buckets(
     the parquet-manifest form of Iceberg's MERGE INTO / overwrite-by-
     partition-filter; old files become dead rows until ``vacuum``.
 
-    The kept/dropped rows append through ``_write_clustered`` (via
-    ``_write_attempt``); the staging table is rewritten whole (see
-    below)."""
+    The kept/dropped rows commit through ``_write_attempt``: stage-backed
+    after the staging table is rewritten whole (see below), or, in a
+    directory without a stage, from score_clips' own persist of the
+    re-scored buckets."""
     import shutil
 
     thr = load_thresholds(out_dir)
@@ -990,6 +936,9 @@ def merge_replace_buckets(
         raise ValueError("merge_replace_buckets requires an initialized run")
     clips = spark.read.parquet(clips_path)
     bks = [int(b) for b in buckets]
+    subset = clips.withColumn("bucket", bucket_col(n_buckets)).filter(
+        F.col("bucket").isin(bks)
+    ).drop("bucket")
     stage = _stage_path(out_dir)
     if _has_parquet(stage):
         # the replace exists BECAUSE the input was corrected, so the
@@ -1001,36 +950,23 @@ def merge_replace_buckets(
         # duplicates staged rows; a leftover temp directory is cleared
         # by the next refresh. Then build the replacement rows from the
         # refreshed stage.
-        subset = clips.withColumn("bucket", bucket_col(n_buckets)).filter(
-            F.col("bucket").isin(bks)
-        ).drop("bucket")
-        feats = with_langid_ppl(
-            clip_features(subset.drop("bytes")), spark
-        ).withColumn("bucket", bucket_col(n_buckets))
         refreshed = (
             spark.read.parquet(stage)
             .filter(~F.col("bucket").isin(bks))
-            .unionByName(feats)
+            .unionByName(_text_scores(subset, n_buckets))
         )
         tmp = stage + ".refresh"
         shutil.rmtree(tmp, ignore_errors=True)
         _write_clustered(refreshed.hint("rebalance", "bucket"), tmp, "overwrite")
         _swap_in(tmp, stage)
         staged = _stage_written(spark, out_dir, refreshed.schema)
-        scored = _scored_from_stage(
-            staged, clips, thr, n_buckets, bks, False, False
-        )
+        scored = _scored_from_stage(staged, None, thr, n_buckets, bks, False, False)
         snap = next_snapshot_id(spark, out_dir)
         _write_attempt(
             scored, out_dir, snap, "replace", all_buckets=bks, stage_backed=True
         )
     else:
-        subset = clips.withColumn("bucket", bucket_col(n_buckets)).filter(
-            F.col("bucket").isin(bks)
-        ).drop("bucket")
-        res = score_clips(
-            spark, subset, thresholds=thr, n_buckets=n_buckets, persist_scored=False
-        )
+        res = score_clips(spark, subset, thresholds=thr, n_buckets=n_buckets)
         snap = next_snapshot_id(spark, out_dir)
         _write_attempt(res.scored, out_dir, snap, "replace", all_buckets=bks)
         res.release()

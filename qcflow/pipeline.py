@@ -1,8 +1,8 @@
 """End-to-end QC pipeline composition (the north-rule flagship).
 
 Stages (lazy; one physical pass over the data per output, with the scored
-frame persisted once — the single most important physical decision when
-~5 downstream aggregates share it, SURVEY §4):
+frame materialized once by score_clips — the single most important
+physical decision when ~5 downstream aggregates share it, SURVEY §4):
 
   read clips
     -> explicit clip_id-hash bucketing (the unit of parallelism & resume)
@@ -14,10 +14,12 @@ frame persisted once — the single most important physical decision when
     -> thresholds (derived once, globally — exact or sketch)
     -> rule engine -> keep / drop_reasons
     -> scrub                          [regexp_replace chain]
-  outputs: kept / dropped parquet (flat, rows clustered by bucket),
-  metrics side tables (drop-reason histogram, langid-confidence
-  histogram), lineage rows per bucket (input/kept/dropped counts) — the
-  resume manifest.
+  outputs (write_outputs: one commit through checkpoint._write_attempt,
+  the same function every resumable increment commits through): kept /
+  dropped parquet (flat, rows clustered by bucket), metrics side tables
+  (drop-reason histogram, langid-confidence histogram, quantiles),
+  lineage rows per bucket (input/kept/dropped counts) — the resume
+  manifest.
 
 Scale notes: `bytes` is pruned out of every path unless a bytes-reading
 stage (PCM consistency, or acoustic features the input does not already
@@ -81,92 +83,68 @@ def score_clips(
     check_acoustics: bool = False,
     n_buckets: int = N_BUCKETS,
     thresholds: Thresholds | None = None,
-    slim_stage: bool = True,
-    persist_scored: bool = True,
 ) -> QcResult:
     """Run features + models + rules + scrub; returns the scored frame
-    (persisted) and the derived thresholds. ``check_acoustics`` adds the
-    acoustic feature stage (clip/silence/DC rules): features the input
-    already carries (dedup_table's survivors) are reused without reading
-    ``bytes``; otherwise one extra Arrow crossing decodes them.
+    and the derived (or given) thresholds. The scored frame is
+    materialized exactly once here — persisted, or staged to parquet
+    whole when ``check_pcm`` reads the bytes — and ``QcResult.release``
+    frees it; its consumers (``write_outputs``, the checkpoint commits)
+    read that materialization and add none of their own.
 
-    ``slim_stage`` (acoustic decode path): stage the decode pass's output
-    — the input's columns minus ``bytes``, plus the decoded features,
-    one row per input row — to parquet and run the text/model pass over
-    that stage, instead of staging the FULL scored frame (every text
-    feature and model output) through the (shared, variance-prone)
-    vdisk, whose write dominated the acoustic stage's 309-1702 clips/s
-    spread (A/B measured in one session, BENCH/BASELINE.md). No join
-    puts the features back, so a repeated ``clip_id`` keeps one row per
-    copy, each with its own features."""
+    ``check_acoustics`` adds the acoustic feature stage
+    (clip/silence/DC rules): features the input already carries
+    (dedup_table's survivors) are reused without reading ``bytes``;
+    otherwise one extra Arrow crossing decodes them. Without
+    ``check_pcm`` that decode pass's output — the input's columns minus
+    ``bytes``, plus the decoded features, one row per input row — is
+    staged to parquet and the text/model pass runs over that slim stage
+    (the full scored frame through the vdisk measured up to 2.45x slower,
+    BENCH/ab_stage_slim.json). No join puts the features back, so a
+    repeated ``clip_id`` keeps one row per copy, each with its own
+    features."""
     import tempfile
 
     from qcflow.udfs import acoustic_features, has_audio_features
 
     decode = check_acoustics and not has_audio_features(clips)
-    if decode and not check_pcm and slim_stage:
-        # decode pass: bytes never leave the scan stage
+    stage_dir = None
+    if decode or check_pcm:
         stage_dir = tempfile.mkdtemp(prefix="qcflow_stage_")
-        acoustic_features(clips).drop("bytes").write.mode("overwrite").parquet(
+    if decode and not check_pcm:
+        # slim decode pass: bytes never leave the scan stage
+        acoustic_features(clips).drop("bytes").write.parquet(
             f"{stage_dir}/acoustic.parquet"
         )
-        narrow = spark.read.parquet(f"{stage_dir}/acoustic.parquet").withColumn(
-            "bucket", bucket_col(n_buckets)
-        )
-        # same narrow-frame de-fragmentation as the main path below
-        narrow = narrow.coalesce(
-            max(2 * spark.sparkContext.defaultParallelism, 1)
-        )
-        # the model output feeds threshold derivation AND the rule pass —
-        # persist it (narrow columns only; the expensive decode is
-        # already materialized in the staging table)
-        df = cached = with_langid_ppl(clip_features(narrow), spark).persist()
-        thr = thresholds or derive_thresholds(df, exact=exact_thresholds)
-        flagged = scrub(
-            apply_rules(df, thr, extra_rules=list(acoustic_rule_conditions()))
-        )
-        return QcResult(
-            scored=flagged, thresholds=thr, _cached=cached, _stage_dir=stage_dir
-        )
-    df = clips.withColumn("bucket", bucket_col(n_buckets))
-    if check_acoustics:
-        # decode crossing (if any) while bytes are still in the plan
-        df = acoustic_features(df)
-    if check_pcm:
-        # the consistency columns derive from byte LENGTHS only; drop the
-        # payload right after so the persist/shuffles stay narrow
-        df = pcm_consistency(df).drop("bytes")
+        df = spark.read.parquet(f"{stage_dir}/acoustic.parquet")
+        df = df.withColumn("bucket", bucket_col(n_buckets))
     else:
-        # Binary column discipline: never carry `bytes` past the scan.
-        df = df.drop("bytes")
+        df = clips.withColumn("bucket", bucket_col(n_buckets))
+        if check_acoustics:
+            # decode crossing (if any) while bytes are still in the plan
+            df = acoustic_features(df)
+        # Binary column discipline: never carry `bytes` past the scan
+        # (the consistency columns derive from byte LENGTHS only)
+        df = (pcm_consistency(df) if check_pcm else df).drop("bytes")
     # the payload-sized scan splits (files.maxPartitionBytes is tuned to
     # the BYTES column) over-fragment this narrow frame — merge to
-    # ~2x cores without a shuffle so the persisted frame and every
+    # ~2x cores without a shuffle so the materialized frame and every
     # downstream action run data-sized tasks, not one per 32 MB of
     # (pruned-away) audio payload. No-op when upstream is already
     # narrower; scales with cluster parallelism, not a constant.
     df = df.coalesce(max(2 * spark.sparkContext.defaultParallelism, 1))
-    df = clip_features(df)
-    df = with_langid_ppl(df, spark)
-    # The UDF output feeds both threshold derivation and the rule pass, so
-    # it must be materialized once, not recomputed per downstream action.
-    # Narrow path: persist (in-memory columnar, cheap). Decode path: a
-    # parquet staging table — persist on a plan whose scan stage carries
-    # the audio bytes measured 5x slower than staging (cache-build GC
-    # churn); at 10^12 rows the staged frame is the Iceberg intermediate
-    # table anyway.
+    df = with_langid_ppl(clip_features(df), spark)
+    # The UDF output feeds threshold derivation and every output of the
+    # commit, so it is materialized once, not recomputed per downstream
+    # action: persisted (in-memory columnar, cheap), except on the full
+    # byte-reading path, which stages through parquet — persist on a
+    # plan whose scan stage carries the audio bytes measured 5x slower
+    # than staging (cache-build GC churn); at 10^12 rows the staged
+    # frame is the Iceberg intermediate table anyway.
     cached = None
-    stage_dir = None
-    if check_pcm or decode:
-        stage_dir = tempfile.mkdtemp(prefix="qcflow_stage_")
-        df.write.mode("overwrite").parquet(f"{stage_dir}/scored.parquet")
+    if check_pcm:
+        df.write.parquet(f"{stage_dir}/scored.parquet")
         df = spark.read.parquet(f"{stage_dir}/scored.parquet")
-    elif persist_scored or thresholds is None:
-        # persist_scored=False is the checkpoint path's hint that IT will
-        # materialize the frame exactly once (the bucket-staged persist
-        # in _write_attempt) — double caching cost ~0.4 s/increment.
-        # Deriving thresholds always forces the persist: the derive
-        # action would otherwise recompute the UDF chain downstream.
+    else:
         df = cached = df.persist()
     thr = thresholds or derive_thresholds(df, exact=exact_thresholds)
     extra = []
@@ -174,8 +152,7 @@ def score_clips(
         extra.append(("pcm_inconsistent", F.col("pcm_inconsistent")))
     if check_acoustics:
         extra.extend(acoustic_rule_conditions())
-    flagged = apply_rules(df, thr, extra_rules=extra)
-    flagged = scrub(flagged)
+    flagged = scrub(apply_rules(df, thr, extra_rules=extra))
     return QcResult(
         scored=flagged, thresholds=thr, _cached=cached, _stage_dir=stage_dir
     )
@@ -196,125 +173,40 @@ DROP_COLS = ["clip_id", "bucket", "lang", "lang_conf", "drop_reasons"]
 
 
 def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
-    """Materialize kept/dropped/metrics/lineage. Returns counts.
+    """Commit a one-shot run as ONE increment of the snapshot manifest:
+    kept/dropped/metrics partials/lineage through
+    ``checkpoint._write_attempt`` (the commit path the resumable,
+    snapshot-diff and replace paths use), then the merged metrics tables
+    (``finalize_metrics``, driver-side). Returns counts, taken from the
+    committed lineage rows.
 
-    kept/dropped are flat, bucket-clustered parquet
-    (checkpoint._write_clustered): a rebalance on bucket lets AQE size
-    the writer-task count to the data, and each writer task writes ONE
-    bucket-sorted file — not one file per bucket directory, whose
-    per-file writer set-up dominated the write at bench scale.
+    ``res.scored`` is already materialized by score_clips, so the write
+    is _write_attempt's three concurrent jobs over it, with kept/dropped
+    rebalanced on bucket: AQE sizes the writer-task count to the data
+    and each writer task writes ONE flat, bucket-sorted file.
 
-    The one-shot output uses the SAME manifest schema as the resumable
-    path (lineage kind='append'), so qcflow.checkpoint readers —
-    read_committed, resume, vacuum, process_increment — work on a
-    plain-run directory instead of crashing on missing columns. Every
-    run commits under its own snapshot id from
+    Every run commits under its own snapshot id from
     checkpoint.next_snapshot_id, allocated before any data is written:
     a run that crashes before its lineage commit burns its id, so its
     rows stay invisible to committed readers after any later run, and
     one-shot appends can share a directory with resumable increments.
-    ``mode='overwrite'`` first removes the previous manifest
-    (lineage + partials), so the run starts a fresh one; ``'append'``
-    adds a snapshot to it.
+    ``mode='overwrite'`` first removes the previous kept/dropped rows
+    and manifest (partials + lineage), so the run starts fresh;
+    ``'append'`` adds a snapshot to them."""
+    import shutil
 
-    Fixed-cost shape (r6, the _write_attempt/r5-resume lesson applied to
-    the one-shot): exactly THREE Spark jobs — kept write, dropped write,
-    and ONE collect of the grouping-sets grains frame (both metric
-    grains + lineage counts in one shuffle, dimension-sized at any
-    corpus size). Partials, lineage and the three final metrics tables
-    are split/merged in pandas (checkpoint's kernels — row-identical to
-    the Spark aggregations, pinned by tests) and written driver-side via
-    pyarrow: the previous five pooled dimension-sized Spark writes were
-    latency-bound job overhead, ~2-3x the scoring cost at bench scale."""
-    import pandas as pd
+    from qcflow.checkpoint import _write_attempt, finalize_metrics, next_snapshot_id
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from qcflow.checkpoint import (
-        _LINEAGE_PA_SCHEMA,
-        _PARTIALS_PA_SCHEMA,
-        _PARTIALS_SPEC,
-        _append_parquet_file,
-        _split_grains_pandas,
-        _write_clustered,
-        finalize_metrics,
-        next_snapshot_id,
-    )
-    from qcflow.summary import grains_frame
-
-    scored = res.scored
-    spark = scored.sparkSession
+    spark = res.scored.sparkSession
     if mode == "overwrite":
-        import shutil
-
         # a fresh manifest BEFORE any data write: a crash mid-run then
         # leaves an empty committed view, never old lineage over new rows
-        for tbl in ("metrics_partials", "lineage"):
+        for tbl in ("kept", "dropped", "metrics_partials", "lineage"):
             shutil.rmtree(f"{out_dir}/{tbl}.parquet", ignore_errors=True)
-    snapshot_id = next_snapshot_id(spark, out_dir)
-    snap = F.lit(snapshot_id).cast("long").alias("snapshot_id")
-    kept = scored.filter(F.col("keep")).select(*KEEP_COLS, snap)
-    dropped = scored.filter(~F.col("keep")).select(*DROP_COLS, snap)
-
-    def _kept_write():
-        # rebalance (not repartition): still clusters rows by bucket, but
-        # AQE sizes the writer-task count to the DATA — a fixed
-        # spark.sql.shuffle.partitions fan-out made every dimension-sized
-        # write pay ~64 near-empty reduce tasks, and at scale it caps
-        # writer parallelism
-        _write_clustered(
-            kept.hint("rebalance", "bucket"), f"{out_dir}/kept.parquet", mode
-        )
-
-    def _dropped_write():
-        _write_clustered(
-            dropped.hint("rebalance", "bucket"), f"{out_dir}/dropped.parquet", mode
-        )
-
-    def _grains_collect():
-        return grains_frame(scored).toPandas()
-
-    # three independent jobs over the already-materialized scored frame
-    # (score_clips persisted/staged it) — submitted together so the
-    # dimension-sized grains shuffle hides behind the kept/dropped ones
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = [
-            ex.submit(_kept_write),
-            ex.submit(_dropped_write),
-            ex.submit(_grains_collect),
-        ]
-        _, _, gpdf = [f.result() for f in futs]
-
-    partials, by_bucket = _split_grains_pandas(gpdf, snapshot_id)
-    if not len(partials):
-        # keep the empty-input table contract: a schema-complete empty
-        # partials table (the Spark path wrote one too)
-        partials = pd.DataFrame({n: [] for n, _ in _PARTIALS_SPEC})
-    tag = f"snap{snapshot_id:010d}"
-    _append_parquet_file(
-        f"{out_dir}/metrics_partials.parquet",
-        partials,
-        _PARTIALS_PA_SCHEMA,
-        tag,
-    )
-    lin_pdf = pd.DataFrame(
-        [(snapshot_id, "append", b, *by_bucket[b]) for b in sorted(by_bucket)],
-        columns=[
-            "snapshot_id", "kind", "bucket", "n_input", "n_kept", "n_dropped",
-        ],
-    )
-    _append_parquet_file(  # the commit point, written last like resume
-        f"{out_dir}/lineage.parquet",
-        lin_pdf,
-        _LINEAGE_PA_SCHEMA,
-        tag,
-    )
-    # final merged metrics tables — pandas kernels, zero Spark jobs
+    snap = next_snapshot_id(spark, out_dir)
+    lin = _write_attempt(res.scored, out_dir, snap, "append")
     finalize_metrics(spark, out_dir)
-    return {
-        "n_input": int(sum(v[0] for v in by_bucket.values())),
-        "n_kept": int(sum(v[1] for v in by_bucket.values())),
-    }
+    return {"n_input": int(lin["n_input"].sum()), "n_kept": int(lin["n_kept"].sum())}
 
 
 def normalize_clips(

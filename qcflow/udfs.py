@@ -136,8 +136,8 @@ def _score_batch(models: QcModels, texts: pd.Series) -> pd.DataFrame:
 def with_langid_ppl(df: DataFrame, spark: SparkSession, seed: int = 1234) -> DataFrame:
     """Append lang / lang_conf / perplexity via one Arrow crossing.
 
-    Measured (BENCH/ab_langid_rebatch.json, scripts/ab_langid_rebatch.py
-    carries the rebatched variant): iterator-side re-chunking of the
+    Measured (BENCH/ab_langid_rebatch.json records the A/B of a
+    rebatched variant, since deleted): iterator-side re-chunking of the
     session's 256-row Arrow batches to 8k rows before scoring is a WASH
     (1.03x) — the packed-buffer kernel in ``_score_batch`` is already
     throughput-bound at 256 rows (~60k clips/s at local[32]), so no

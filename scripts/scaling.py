@@ -243,14 +243,15 @@ def main() -> int:
 
 Full-frame staging (r2 layout: transcripts + every feature through the
 parquet staging table) vs slim staging (only clip_id + 8 acoustic
-doubles staged, hash-joined back onto the narrow text/model frame —
-score_clips slim_stage). Each session interleaves A/B/A/B under the
-same host conditions (variance lesson). Measured: {sess}.
-Winner: {ab['winner']} — {ab['rationale']}. Identical kept sets
+doubles staged, hash-joined back onto the narrow text/model frame).
+Each session interleaved A/B/A/B under the same host conditions
+(variance lesson). Measured: {sess}.
+Winner: {ab['winner']} — {ab['rationale']}. Identical kept sets were
 asserted within every A/B (with SHARED thresholds: percentile_approx
 sketch merges are partition-layout-sensitive, so per-variant threshold
-derivation would differ by boundary rows — caught by the A/B harness,
-pinned in tests/test_qc_pipeline.py::test_slim_stage_equals_full_stage).
+derivation would differ by boundary rows). The slim stage is now
+score_clips' only acoustics-only layout; the full-stage variant and
+its A/B harness were deleted after this record.
 """
     os.makedirs(f"{REPO}/BENCH", exist_ok=True)
     with open(f"{REPO}/BENCH/BASELINE.md", "w") as f:

@@ -202,11 +202,15 @@ def test_pcm_stats_udf(spark, clips_dir):
         assert (unk.n_samples == 0).all()
 
 
-def test_empty_input(spark):
-    """Empty table: explicit thresholds run to empty outputs; derived
-    thresholds fail with a clear error, not a TypeError."""
+def test_empty_input(spark, tmp_path):
+    """Empty table: explicit thresholds run to empty outputs — including
+    a schema-complete empty metrics_partials table and all three merged
+    metrics tables; derived thresholds fail with a clear error, not a
+    TypeError."""
+    import pyarrow.parquet as pq
     import pytest as _pytest
 
+    from qcflow.checkpoint import _PARTIALS_SPEC, _QUANTILE_SPEC, _grain_spec
     from qcflow.pipeline import score_clips, write_outputs
     from qcflow.rules import Thresholds
     from qcflow.schema import CLIPS_SCHEMA
@@ -214,9 +218,19 @@ def test_empty_input(spark):
     empty = spark.createDataFrame([], CLIPS_SCHEMA)
     thr = Thresholds(repetition_lo=0.1, cps_lo=1.0, cps_hi=100.0, ppl_hi=100.0)
     res = score_clips(spark, empty, thresholds=thr)
-    out = write_outputs(res, "/tmp/qcflow_empty_test")
+    out_dir = str(tmp_path / "empty")
+    out = write_outputs(res, out_dir)
     assert out == {"n_input": 0, "n_kept": 0}
     res.release()
+    for name, spec in [
+        ("metrics_partials", _PARTIALS_SPEC),
+        ("metrics_drop_reasons", _grain_spec("drop_reasons")),
+        ("metrics_lang_conf", _grain_spec("lang_conf")),
+        ("metrics_quantiles", _QUANTILE_SPEC),
+    ]:
+        table = pq.read_table(f"{out_dir}/{name}.parquet")
+        assert table.num_rows == 0, name
+        assert table.column_names == [n for n, _ in spec], name
 
     with _pytest.raises(ValueError, match="cannot derive thresholds"):
         score_clips(spark, empty)
@@ -246,36 +260,6 @@ def test_snr_tolerates_foreign_rows(spark):
     assert np.isnan(out.loc["not-a-synthetic-id", "snr_db"])
     assert np.isnan(out.loc["clip-xyz", "snr_db"])
     assert out.loc["clip-000000000003", "snr_db"] > 60
-
-
-def test_slim_stage_equals_full_stage(spark, clips_dir):
-    """The two acoustic staging layouts (full scored frame through
-    parquet vs slim decode-columns + join-back) are pure physical-plan
-    choices: with FIXED thresholds the scored output must be identical.
-    (With approx-derived thresholds the layouts can differ by boundary
-    rows — percentile_approx sketch merges are partition-layout
-    sensitive — which is why score_clips derives thresholds from the
-    same frame it scores, and the A/B script shares one threshold set.)"""
-    from qcflow.rules import Thresholds
-
-    thr = Thresholds(repetition_lo=0.3, cps_lo=5.0, cps_hi=30.0, ppl_hi=50.0)
-    clips = spark.read.parquet(f"{clips_dir}/clips.parquet")
-    frames = {}
-    for slim in (False, True):
-        res = score_clips(
-            spark, clips, thresholds=thr, check_acoustics=True, slim_stage=slim
-        )
-        frames[slim] = (
-            res.scored.select(
-                "clip_id", "keep", "drop_reasons", "lang", "scrubbed_transcript",
-                "clip_ratio", "silence_ratio", "dc_offset",
-            )
-            .toPandas()
-            .sort_values("clip_id")
-            .reset_index(drop=True)
-        )
-        res.release()
-    pd.testing.assert_frame_equal(frames[False], frames[True])
 
 
 def test_write_outputs_metrics_match_spark_kernels(spark, clips_t2k, tmp_path):

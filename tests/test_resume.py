@@ -480,7 +480,7 @@ _HISTORY = [
 
 def _write_history(out: str) -> None:
     """``_HISTORY`` as a lineage table, one committed file per snapshot."""
-    from qcflow.checkpoint import _LINEAGE_PA_SCHEMA, _append_parquet_file
+    from qcflow.checkpoint import _LINEAGE_SPEC, _append_parquet_file
 
     lin = pd.DataFrame(
         _HISTORY,
@@ -488,7 +488,7 @@ def _write_history(out: str) -> None:
     )
     for snap, rows in lin.groupby("snapshot_id"):
         _append_parquet_file(
-            f"{out}/lineage.parquet", rows, _LINEAGE_PA_SCHEMA, f"snap{snap:010d}"
+            f"{out}/lineage.parquet", rows, _LINEAGE_SPEC, f"snap{snap:010d}"
         )
 
 
@@ -558,6 +558,33 @@ def test_metric_reads_run_no_spark_jobs(spark, tmp_path, clips_ready):
     rows = []
     assert _jobs(spark, lambda: rows.extend(read_quantile_metrics(spark, out).collect())) == 0
     assert rows
+
+
+def test_read_committed_builds_without_jobs(spark, tmp_path, clips_ready):
+    """A committed read takes the data schema from one file's footer:
+    building the DataFrame submits no Spark job (no schema inference),
+    and the schema equals what Spark infers from the written files."""
+    out = str(tmp_path / "schema")
+    run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS, max_buckets=2)
+    for table in ("kept", "dropped"):
+        got = []
+        assert _jobs(spark, lambda: got.append(read_committed(spark, out, table))) == 0
+        inferred = spark.read.parquet(f"{out}/{table}.parquet")
+        # the semi-join moves its keys to the front: compare by name
+        assert sorted(got[0].schema, key=lambda f: f.name) == sorted(
+            inferred.schema, key=lambda f: f.name
+        ), table
+        assert got[0].count() == inferred.count(), table
+
+
+def test_remaining_counts_buckets_left_when_capped(spark, tmp_path, clips_ready):
+    """``remaining`` counts the uncommitted buckets also when the capped
+    to-do list is empty."""
+    out = str(tmp_path / "capped")
+    r0 = run_resumable(spark, CLIPS, out, n_buckets=4, max_buckets=0)
+    assert r0 == {"processed_buckets": 0, "remaining": 4}
+    r1 = run_resumable(spark, CLIPS, out, n_buckets=4, max_buckets=1)
+    assert r1 == {"processed_buckets": 1, "remaining": 3}
 
 
 def test_inspect_reads_manifest_without_jobs(spark, tmp_path, capsys):
