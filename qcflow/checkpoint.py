@@ -56,6 +56,7 @@ from qcflow.pipeline import (
     N_BUCKETS,
     bucket_col,
     score_clips,
+    text_scores,
 )
 from qcflow.rules import (
     Thresholds,
@@ -64,8 +65,7 @@ from qcflow.rules import (
     derive_thresholds,
 )
 from qcflow.scrub import scrub
-from qcflow.features import clip_features, pcm_consistency
-from qcflow.udfs import with_langid_ppl
+from qcflow.features import pcm_consistency
 
 
 def _thr_path(out_dir: str) -> str:
@@ -296,20 +296,22 @@ def _append_parquet_file(
 def _write_clustered(df: DataFrame, path: str, mode: str = "append") -> None:
     """The one layout of the batch data tables (kept, dropped,
     scores_stage): FLAT parquet, ``bucket`` an ordinary int column, rows
-    sorted by bucket within each writer task — so every writer task
-    writes exactly one file, and a bucket filter is served by the
-    parquet min/max statistics of the sorted column instead of
-    ``bucket=N`` directory pruning. The caller chooses the distribution
-    (a rebalance on bucket for a fresh frame, the staged scan's own
-    tasks for a stage-backed increment), so the file count follows the
-    data size, not the bucket fan-out — per-file writer set-up, not
+    sorted by (bucket, clip_id) within each writer task — so every
+    writer task writes exactly one file, a bucket filter is served by
+    the parquet min/max statistics of the sorted column instead of
+    ``bucket=N`` directory pruning, and a file's bytes do not depend on
+    the order its rows were fetched from the shuffle. The caller
+    chooses the distribution (a rebalance on bucket for a fresh frame,
+    the staged scan's own tasks for a stage-backed increment), so the
+    file count follows the data size, not the bucket fan-out — per-file
+    writer set-up, not
     bytes, is what a small commit pays for. Committed readers select
     rows by the (snapshot_id, bucket) semi-join and never depend on the
     directory shape. Mixed layouts are not
     supported: a table directory that still holds ``bucket=N``
     subdirectories from the old partitioned layout must be rewritten
     (or deleted) before flat files are appended to it."""
-    df.sortWithinPartitions("bucket").write.mode(mode).parquet(path)
+    df.sortWithinPartitions("bucket", "clip_id").write.mode(mode).parquet(path)
 
 
 def _split_grains_pandas(gpdf, snapshot_id: int):
@@ -428,8 +430,10 @@ def _write_attempt(
     lineage commit are split in pandas (row-identical to the Spark
     aggregations in qcflow.summary, pinned by tests) and written
     DRIVER-SIDE via pyarrow with an atomic rename into the table
-    directories. The partials file is appended even when empty, so an
-    empty input still leaves a schema-complete partials table. The
+    directories; the partials are sorted by their key columns first, so
+    the file does not depend on the collect's row order. The partials
+    file is appended even when empty, so an empty input still leaves a
+    schema-complete partials table. The
     perplexity grain is the fixed log-edge quantile sketch —
     sum-mergeable, so per-lang p50/p99 never rescan history OR buffer a
     hot language's raw values on one reducer."""
@@ -454,6 +458,9 @@ def _write_attempt(
         _, _, gpdf = [f.result() for f in futs]
 
     partials, by_bucket = _split_grains_pandas(gpdf, snapshot_id)
+    partials = partials.sort_values(
+        [n for n, _ in _PARTIALS_SPEC if n != "n"], ignore_index=True
+    )
     tag = f"snap{snapshot_id:010d}"
     _append_parquet_file(
         f"{out_dir}/metrics_partials.parquet", partials, _PARTIALS_SPEC, tag
@@ -502,33 +509,18 @@ def _stage_written(spark: SparkSession, out_dir: str, schema) -> DataFrame:
     return df
 
 
-def _text_scores(clips: DataFrame, n_buckets: int) -> DataFrame:
-    """The staged columns: ``clips`` minus ``bytes``, plus the text
-    features, the langid/perplexity outputs and ``bucket``. The
-    payload-sized scan splits are merged before the narrow UDF pass
-    (same de-fragmentation as score_clips: splits are tuned to the
-    pruned-away bytes column)."""
-    spark = clips.sparkSession
-    narrow = clips.drop("bytes").coalesce(
-        max(2 * spark.sparkContext.defaultParallelism, 1)
-    )
-    return with_langid_ppl(clip_features(narrow), spark).withColumn(
-        "bucket", bucket_col(n_buckets)
-    )
-
-
 def _stage_scores(
     clips: DataFrame, out_dir: str, n_buckets: int
 ) -> DataFrame:
-    """Run the text-feature + langid/perplexity pass ONCE over ``clips``
-    and persist the (narrow) per-clip scores to the bucket-clustered
-    staging table. The write shuffles only the UDF's narrow output
-    (clip_id + features + lang columns — no bytes) in a rebalance on
-    bucket, so AQE sizes the file count to the data; each file is
-    bucket-sorted (``_write_clustered``), so later bucket-filtered reads
-    skip row groups by the column's min/max statistics. Returns the
-    read-back staged frame."""
-    feats = _text_scores(clips, n_buckets)
+    """Run the text pass (``pipeline.text_scores``: one task per core)
+    ONCE over ``clips`` and persist the (narrow) per-clip scores to the
+    bucket-clustered staging table. The write shuffles only the UDF's
+    narrow output (clip_id + features + lang columns — no bytes) in a
+    rebalance on bucket, so AQE sizes the file count to the data; each
+    file is bucket-sorted (``_write_clustered``), so later
+    bucket-filtered reads skip row groups by the column's min/max
+    statistics. Returns the read-back staged frame."""
+    feats = text_scores(clips, n_buckets)
     _write_clustered(
         feats.hint("rebalance", "bucket"), _stage_path(out_dir), "overwrite"
     )
@@ -597,6 +589,38 @@ def _scored_from_stage(
     return scrub(apply_rules(df, thr, extra_rules=extra))
 
 
+def _commit_from_stage(
+    staged: DataFrame,
+    clips,  # () -> DataFrame, called only when a byte-derived check is on
+    out_dir: str,
+    thr: Thresholds,
+    n_buckets: int,
+    buckets: list[int],
+    kind: str,
+    check_pcm: bool,
+    check_acoustics: bool,
+) -> int:
+    """Commit ``buckets`` from the staged scores as one ``kind`` snapshot
+    (a resumable increment, or a bucket replace); returns its id. A
+    commit that joins byte-derived columns (``check_pcm``, or acoustic
+    features the stage does not carry) localCheckpoints the joined frame
+    once, so its decode runs once; every other commit is stage-backed
+    (see ``_write_attempt``)."""
+    byte_joined = check_pcm or _decodes(staged, check_acoustics)
+    scored = _scored_from_stage(
+        staged, clips() if byte_joined else None, thr, n_buckets, buckets,
+        check_pcm, check_acoustics,
+    )
+    if byte_joined:
+        scored = scored.localCheckpoint(eager=True)
+    snap = next_snapshot_id(staged.sparkSession, out_dir)
+    _write_attempt(
+        scored, out_dir, snap, kind, all_buckets=buckets,
+        stage_backed=not byte_joined,
+    )
+    return snap
+
+
 def run_resumable(
     spark: SparkSession,
     clips_path: str,
@@ -625,10 +649,7 @@ def run_resumable(
     bucket hashing); corrections go through merge_replace_buckets,
     which refreshes the staged rows it replaces.
 
-    An increment that joins byte-derived columns (``check_pcm``, or
-    acoustic features the stage does not carry) localCheckpoints the
-    joined frame once, so its decode runs once; every other increment
-    commits stage-backed (see ``_write_attempt``)."""
+    Each increment commits through ``_commit_from_stage``."""
     # the clips frame is only analyzed when a path actually needs the
     # bytes (staging, byte-derived checks): a parquet read costs a
     # footer/listing roundtrip that a stage-backed increment should not
@@ -664,22 +685,9 @@ def run_resumable(
         staged = _read_stage_cached(spark, out_dir)
     else:
         staged = _stage_scores(_clips(), out_dir, n_buckets)
-    byte_joined = check_pcm or _decodes(staged, check_acoustics)
-    scored = _scored_from_stage(
-        staged,
-        _clips() if byte_joined else None,
-        thr,
-        n_buckets,
-        todo,
-        check_pcm,
-        check_acoustics,
-    )
-    if byte_joined:
-        scored = scored.localCheckpoint(eager=True)
-    snap = next_snapshot_id(spark, out_dir)
-    _write_attempt(
-        scored, out_dir, snap, "append", all_buckets=todo,
-        stage_backed=not byte_joined,
+    _commit_from_stage(
+        staged, _clips, out_dir, thr, n_buckets, todo, "append",
+        check_pcm, check_acoustics,
     )
     if remaining == 0:
         finalize_metrics(spark, out_dir)
@@ -917,6 +925,8 @@ def merge_replace_buckets(
     out_dir: str,
     buckets: list[int],
     n_buckets: int = N_BUCKETS,
+    check_pcm: bool = False,
+    check_acoustics: bool = False,
 ) -> dict:
     """MERGE-shaped bucket upsert: re-score the given buckets from the
     (possibly corrected) input and commit with kind='replace' — the new
@@ -925,10 +935,11 @@ def merge_replace_buckets(
     the parquet-manifest form of Iceberg's MERGE INTO / overwrite-by-
     partition-filter; old files become dead rows until ``vacuum``.
 
-    The kept/dropped rows commit through ``_write_attempt``: stage-backed
-    after the staging table is rewritten whole (see below), or, in a
-    directory without a stage, from score_clips' own persist of the
-    re-scored buckets."""
+    The replaced rows pass the same rules as the run's other commits:
+    ``check_pcm`` / ``check_acoustics`` as in ``run_resumable``. They
+    commit through ``_commit_from_stage`` after the staging table is
+    rewritten whole (see below), or, in a directory without a stage,
+    from score_clips' own materialization of the re-scored buckets."""
     import shutil
 
     thr = load_thresholds(out_dir)
@@ -936,9 +947,7 @@ def merge_replace_buckets(
         raise ValueError("merge_replace_buckets requires an initialized run")
     clips = spark.read.parquet(clips_path)
     bks = [int(b) for b in buckets]
-    subset = clips.withColumn("bucket", bucket_col(n_buckets)).filter(
-        F.col("bucket").isin(bks)
-    ).drop("bucket")
+    subset = clips.filter(bucket_col(n_buckets).isin(bks))
     stage = _stage_path(out_dir)
     if _has_parquet(stage):
         # the replace exists BECAUSE the input was corrected, so the
@@ -953,20 +962,22 @@ def merge_replace_buckets(
         refreshed = (
             spark.read.parquet(stage)
             .filter(~F.col("bucket").isin(bks))
-            .unionByName(_text_scores(subset, n_buckets))
+            .unionByName(text_scores(subset, n_buckets))
         )
         tmp = stage + ".refresh"
         shutil.rmtree(tmp, ignore_errors=True)
         _write_clustered(refreshed.hint("rebalance", "bucket"), tmp, "overwrite")
         _swap_in(tmp, stage)
         staged = _stage_written(spark, out_dir, refreshed.schema)
-        scored = _scored_from_stage(staged, None, thr, n_buckets, bks, False, False)
-        snap = next_snapshot_id(spark, out_dir)
-        _write_attempt(
-            scored, out_dir, snap, "replace", all_buckets=bks, stage_backed=True
+        snap = _commit_from_stage(
+            staged, lambda: clips, out_dir, thr, n_buckets, bks, "replace",
+            check_pcm, check_acoustics,
         )
     else:
-        res = score_clips(spark, subset, thresholds=thr, n_buckets=n_buckets)
+        res = score_clips(
+            spark, subset, thresholds=thr, n_buckets=n_buckets,
+            check_pcm=check_pcm, check_acoustics=check_acoustics,
+        )
         snap = next_snapshot_id(spark, out_dir)
         _write_attempt(res.scored, out_dir, snap, "replace", all_buckets=bks)
         res.release()

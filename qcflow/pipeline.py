@@ -5,12 +5,13 @@ frame materialized once by score_clips — the single most important
 physical decision when ~5 downstream aggregates share it, SURVEY §4):
 
   read clips
-    -> explicit clip_id-hash bucketing (the unit of parallelism & resume)
     -> optional acoustic features     [ONE decode Arrow crossing, or
                                        reused as carried by the input]
     -> optional PCM consistency       [byte-length column expressions]
+    -> text_scores: explicit clip_id-hash bucketing (the unit of
+       parallelism & resume), merged to one task per core (no shuffle)
     -> transcript features            [column expressions, codegen]
-    -> langid + perplexity            [ONE Arrow crossing]
+    -> langid + perplexity            [ONE Arrow crossing, one task wave]
     -> thresholds (derived once, globally — exact or sketch)
     -> rule engine -> keep / drop_reasons
     -> scrub                          [regexp_replace chain]
@@ -75,6 +76,24 @@ def bucket_col(n_buckets: int = N_BUCKETS):
     return F.pmod(F.xxhash64("clip_id"), F.lit(n_buckets)).cast("int")
 
 
+def text_scores(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
+    """The one text pass (score_clips and the checkpoint's staging
+    writes): ``df`` minus ``bytes``, plus ``bucket``, the text features
+    and lang / lang_conf / perplexity in one Arrow crossing, over ONE
+    partition per core. The payload-sized scan splits over-fragment
+    this narrow frame, and the crossing costs a fixed ~0.3 s per wave of
+    Python tasks on 4 cores against ~40 ms of kernel per 4000 rows, so
+    the coalesce (no shuffle; a no-op when already narrower) is the
+    lever — and it sizes every action downstream of the result."""
+    spark = df.sparkSession
+    one_wave = (
+        df.drop("bytes")
+        .withColumn("bucket", bucket_col(n_buckets))
+        .coalesce(max(spark.sparkContext.defaultParallelism, 1))
+    )
+    return with_langid_ppl(clip_features(one_wave), spark)
+
+
 def score_clips(
     spark: SparkSession,
     clips: DataFrame,
@@ -116,23 +135,12 @@ def score_clips(
             f"{stage_dir}/acoustic.parquet"
         )
         df = spark.read.parquet(f"{stage_dir}/acoustic.parquet")
-        df = df.withColumn("bucket", bucket_col(n_buckets))
     else:
-        df = clips.withColumn("bucket", bucket_col(n_buckets))
-        if check_acoustics:
-            # decode crossing (if any) while bytes are still in the plan
-            df = acoustic_features(df)
-        # Binary column discipline: never carry `bytes` past the scan
-        # (the consistency columns derive from byte LENGTHS only)
-        df = (pcm_consistency(df) if check_pcm else df).drop("bytes")
-    # the payload-sized scan splits (files.maxPartitionBytes is tuned to
-    # the BYTES column) over-fragment this narrow frame — merge to
-    # ~2x cores without a shuffle so the materialized frame and every
-    # downstream action run data-sized tasks, not one per 32 MB of
-    # (pruned-away) audio payload. No-op when upstream is already
-    # narrower; scales with cluster parallelism, not a constant.
-    df = df.coalesce(max(2 * spark.sparkContext.defaultParallelism, 1))
-    df = with_langid_ppl(clip_features(df), spark)
+        df = acoustic_features(clips) if check_acoustics else clips
+        # the consistency columns derive from byte LENGTHS only; the
+        # text pass drops `bytes` right after
+        df = pcm_consistency(df) if check_pcm else df
+    df = text_scores(df, n_buckets)
     # The UDF output feeds threshold derivation and every output of the
     # commit, so it is materialized once, not recomputed per downstream
     # action: persisted (in-memory columnar, cheap), except on the full

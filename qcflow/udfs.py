@@ -136,12 +136,13 @@ def _score_batch(models: QcModels, texts: pd.Series) -> pd.DataFrame:
 def with_langid_ppl(df: DataFrame, spark: SparkSession, seed: int = 1234) -> DataFrame:
     """Append lang / lang_conf / perplexity via one Arrow crossing.
 
-    Measured (BENCH/ab_langid_rebatch.json records the A/B of a
-    rebatched variant, since deleted): iterator-side re-chunking of the
-    session's 256-row Arrow batches to 8k rows before scoring is a WASH
-    (1.03x) — the packed-buffer kernel in ``_score_batch`` is already
-    throughput-bound at 256 rows (~60k clips/s at local[32]), so no
-    re-batching layer is kept."""
+    Measured on a 4-core host: the packed-buffer kernel in
+    ``_score_batch`` scores 4000 transcripts in ~35-45 ms single-threaded,
+    while the crossing costs ~0.3 s per wave of Python tasks — so the
+    lever is the task count (``pipeline.text_scores`` runs one task per
+    core), not the kernel or the batch size. Iterator-side re-chunking
+    of the session's 256-row Arrow batches to 8k rows was a wash (1.03x,
+    BENCH/ab_langid_rebatch.json), so no re-batching layer is kept."""
     bc = _broadcast_models(spark, seed)
 
     @F.pandas_udf("lang string, lang_conf double, perplexity double")

@@ -25,7 +25,7 @@ import subprocess
 import sys
 
 ROWS = int(os.environ.get("QCFLOW_SCALING_ROWS", "150000"))
-CLIPS = f"/root/repo/.cache/clips_scale{ROWS}"
+CLIPS = f"/root/repo/.cache/clips_scale{ROWS}_v2"
 REPO = "/root/repo"
 
 _RUN_TEMPLATE = """

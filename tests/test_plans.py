@@ -151,6 +151,66 @@ def test_stage_backed_increment_pushes_bucket_filter(spark, tmp_path, clips_t2k)
     assert "In(bucket, [5,6,7])" in seg, seg
 
 
+def _first_stage_tasks(spark, fn) -> int:
+    """Task count of the first stage ``fn`` runs (its scan + Python
+    stage), read from the status tracker by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("one-wave", "one-wave")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = [
+        s for j in st.getJobIdsForGroup("one-wave")
+        for s in st.getJobInfo(j).stageIds
+    ]
+    return st.getStageInfo(min(stages)).numTasks
+
+
+def test_text_pass_runs_one_task_per_core(spark, tmp_path, clips_t2k):
+    """The langid/perplexity crossing costs a fixed price per wave of
+    Python tasks, not per row: on a scan with more splits than cores,
+    score_clips' persisted frame and the staging write's scoring stage
+    both run exactly one task per core (no shuffle added)."""
+    from qcflow.checkpoint import _stage_scores
+    from qcflow.pipeline import score_clips
+
+    n = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
+    try:
+        clips = spark.read.parquet(clips_t2k)
+        assert clips.rdd.getNumPartitions() > 2 * n
+        res = score_clips(spark, clips, thresholds=_dummy_thr())
+        assert res._cached.rdd.getNumPartitions() == n
+        res.release()
+        tasks = _first_stage_tasks(
+            spark, lambda: _stage_scores(clips, str(tmp_path / "st"), 16)
+        )
+        assert tasks == n
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def test_text_pass_keeps_narrow_input(spark, tmp_path, clips_t2k):
+    """An input already narrower than the core count keeps its
+    partitions and gains no Exchange."""
+    from qcflow.pipeline import text_scores
+
+    path = str(tmp_path / "narrow.parquet")
+    (
+        spark.read.parquet(clips_t2k).drop("bytes").limit(300)
+        .coalesce(2).write.parquet(path)
+    )
+    df = spark.read.parquet(path)
+    k = df.rdd.getNumPartitions()
+    assert k < spark.sparkContext.defaultParallelism
+    out = text_scores(df)
+    assert out.rdd.getNumPartitions() == k
+    assert "Exchange" not in plan_of(out)
+
+
 def test_dynamic_partition_pruning_fires(spark, tmp_path):
     """Day-partitioned fact joined to a filtered dim: the scan must carry
     a dynamicpruning subquery so only the surviving days' directories are

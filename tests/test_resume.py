@@ -718,3 +718,51 @@ def test_merge_replace_refreshes_stage(spark, tmp_path, clips_ready):
     kept = read_committed(spark, out, "kept").filter(F.col("bucket") == target)
     assert kept.count() == 0
     assert dropped.filter(F.col("drop_reasons").contains("empty_transcript")).count() == dropped.count()
+
+
+@pytest.mark.parametrize("staged", [True, False], ids=["stage", "no_stage"])
+def test_merge_replace_keeps_acoustic_rules(spark, tmp_path, clips_ready, staged):
+    """A bucket replace in a run with check_acoustics applies the
+    acoustic rules too: a planted clipped clip in the replaced bucket
+    stays dropped for ``clipped_audio``, through the stage refresh and
+    through the no-stage re-score."""
+    from qcflow import audio
+    from qcflow.pipeline import bucket_col
+
+    base = (
+        spark.read.parquet(CLIPS)
+        .filter(F.col("bytes").isNotNull() & (F.col("codec") == "pcm16"))
+        .orderBy("clip_id")
+        .limit(80)
+    )
+    rows = [r.asDict() for r in base.collect()]
+    t = np.arange(8000) / 16000
+    wave = np.clip(3.0 * np.sin(2 * np.pi * 200 * t), -0.999, 0.999)
+    rows.append(
+        {**rows[0], "clip_id": "x-clipped", "sr_hz": 16000,
+         "bytes": audio.pcm16_encode(wave.astype(np.float32))}
+    )
+    path = str(tmp_path / "clips.parquet")
+    spark.createDataFrame(rows, schema=base.schema).write.parquet(path)
+    target = (
+        spark.read.parquet(path).filter(F.col("clip_id") == "x-clipped")
+        .select(bucket_col(4)).first()[0]
+    )
+
+    out = str(tmp_path / "out")
+    run_resumable(spark, path, out, n_buckets=4, check_acoustics=True)
+    if not staged:
+        import shutil
+
+        shutil.rmtree(f"{out}/scores_stage.parquet")
+    merge_replace_buckets(
+        spark, path, out, [target], n_buckets=4, check_acoustics=True
+    )
+    row = (
+        read_committed(spark, out, "dropped")
+        .filter(F.col("clip_id") == "x-clipped").collect()
+    )
+    assert len(row) == 1
+    assert "clipped_audio" in row[0]["drop_reasons"].split(",")
+    kept = read_committed(spark, out, "kept")
+    assert kept.filter(F.col("clip_id") == "x-clipped").count() == 0
