@@ -22,7 +22,11 @@ import time
 
 BENCH_CLIP_ROWS = int(os.environ.get("QCFLOW_BENCH_CLIP_ROWS", "60000"))
 # shared with scripts/scaling.py so the table is generated once
-CLIPS_CACHE = f"/root/repo/.cache/clips_scale{BENCH_CLIP_ROWS}_v2"
+CLIPS_CACHE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)),
+    ".cache",
+    f"clips_scale{BENCH_CLIP_ROWS}_v2",
+)
 
 PARITY_QUERIES = [
     "tpch_q1",

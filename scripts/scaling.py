@@ -25,7 +25,11 @@ import subprocess
 import sys
 
 ROWS = int(os.environ.get("QCFLOW_SCALING_ROWS", "150000"))
-CLIPS = f"/root/repo/.cache/clips_scale{ROWS}_v2"
+CLIPS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".cache",
+    f"clips_scale{ROWS}_v2",
+)
 REPO = "/root/repo"
 
 _RUN_TEMPLATE = """
