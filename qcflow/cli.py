@@ -139,7 +139,8 @@ def main(argv: list[str] | None = None) -> int:
     pk.add_argument("--partitions", type=int, default=None)
 
     i = sub.add_parser(
-        "inspect", help="manifest summary: snapshot history + committed counts"
+        "inspect", help="manifest summary: snapshot history, committed counts and a "
+        "resumable load's pending buckets"
     )
     i.add_argument("--out", required=True)
     i.add_argument("--cpus", type=int, default=None)
@@ -151,14 +152,21 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("qcflow-cli", cpus=args.cpus)
     t0 = time.time()
     if args.cmd == "inspect":
-        from qcflow.checkpoint import completed_buckets, snapshots
+        from qcflow.checkpoint import completed_buckets, read_pending, snapshots
 
         # manifest-sized, read on the driver: no Spark job
         snaps = snapshots(spark, args.out)
+        done = completed_buckets(spark, args.out)
+        rec = read_pending(args.out)
         out = {
             "cmd": "inspect",
             "snapshots": [r.asDict() for r in snaps.collect()] if snaps is not None else [],
-            "committed_buckets": len(completed_buckets(spark, args.out)),
+            "committed_buckets": len(done),
+            # a resumable load's written, not yet committed buckets
+            "pending": None if rec is None else {
+                "snapshot_id": rec["snapshot_id"],
+                "buckets": len(set(rec["lineage"]["bucket"]) - set(done)),
+            },
         }
     elif args.cmd == "stream":
         from qcflow.checkpoint import load_thresholds, save_thresholds

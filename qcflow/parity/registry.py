@@ -59,9 +59,8 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
 # applicationId so a restarted session never sees a dead plan; entries
 # of other applications are evicted on allocation (the _MODEL_BC_CACHE
 # pattern). CONTRACT: driver tables under sf_dir are immutable inputs —
-# this cache has no writer invalidation (unlike checkpoint's
-# _read_stage_cached, whose tables have writers); anything that rewrites
-# a table at a cached path in-application must not read it through t().
+# this cache has no writer invalidation; anything that rewrites a table
+# at a cached path in-application must not read it through t().
 _READ_CACHE: dict = {}
 
 

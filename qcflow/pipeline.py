@@ -16,7 +16,7 @@ physical decision when ~5 downstream aggregates share it, SURVEY §4):
     -> rule engine -> keep / drop_reasons
     -> scrub                          [regexp_replace chain]
   outputs (write_outputs: one commit through checkpoint._write_attempt,
-  the same function every resumable increment commits through): kept /
+  whose data half writes every resumable load's rows too): kept /
   dropped parquet (flat, rows clustered by bucket), metrics side tables
   (drop-reason histogram, langid-confidence histogram, quantiles),
   lineage rows per bucket (input/kept/dropped counts) — the resume
@@ -77,9 +77,9 @@ def bucket_col(n_buckets: int = N_BUCKETS):
 
 
 def text_scores(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
-    """The one text pass (score_clips and the checkpoint's staging
-    writes): ``df`` minus ``bytes``, plus ``bucket``, the text features
-    and lang / lang_conf / perplexity in one Arrow crossing, over ONE
+    """The one text pass (score_clips, which every checkpoint write
+    scores through): ``df`` minus ``bytes``, plus ``bucket``, the text
+    features and lang / lang_conf / perplexity in one Arrow crossing, over ONE
     partition per core. The payload-sized scan splits over-fragment
     this narrow frame, and the crossing costs a fixed ~0.3 s per wave of
     Python tasks on 4 cores against ~40 ms of kernel per 4000 rows, so
@@ -107,7 +107,8 @@ def score_clips(
     and the derived (or given) thresholds. The scored frame is
     materialized exactly once here — persisted, or staged to parquet
     whole when ``check_pcm`` reads the bytes — and ``QcResult.release``
-    frees it; its consumers (``write_outputs``, the checkpoint commits)
+    frees it (also when deriving the thresholds fails, e.g. on an empty
+    input); its consumers (``write_outputs``, the checkpoint writes)
     read that materialization and add none of their own.
 
     ``check_acoustics`` adds the acoustic feature stage
@@ -154,7 +155,11 @@ def score_clips(
         df = spark.read.parquet(f"{stage_dir}/scored.parquet")
     else:
         df = cached = df.persist()
-    thr = thresholds or derive_thresholds(df, exact=exact_thresholds)
+    try:
+        thr = thresholds or derive_thresholds(df, exact=exact_thresholds)
+    except Exception:
+        QcResult(df, None, cached, stage_dir).release()
+        raise
     extra = []
     if check_pcm:
         extra.append(("pcm_inconsistent", F.col("pcm_inconsistent")))
@@ -183,8 +188,8 @@ DROP_COLS = ["clip_id", "bucket", "lang", "lang_conf", "drop_reasons"]
 def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
     """Commit a one-shot run as ONE increment of the snapshot manifest:
     kept/dropped/metrics partials/lineage through
-    ``checkpoint._write_attempt`` (the commit path the resumable,
-    snapshot-diff and replace paths use), then the merged metrics tables
+    ``checkpoint._write_attempt`` (the write the resumable, snapshot-diff
+    and replace paths use), then the merged metrics tables
     (``finalize_metrics``, driver-side). Returns counts, taken from the
     committed lineage rows.
 
@@ -199,11 +204,17 @@ def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
     rows stay invisible to committed readers after any later run, and
     one-shot appends can share a directory with resumable increments.
     ``mode='overwrite'`` first removes the previous kept/dropped rows
-    and manifest (partials + lineage), so the run starts fresh;
+    and manifest (partials, lineage and a resumable load's pending
+    record), so the run starts fresh;
     ``'append'`` adds a snapshot to them."""
     import shutil
 
-    from qcflow.checkpoint import _write_attempt, finalize_metrics, next_snapshot_id
+    from qcflow.checkpoint import (
+        _drop_pending,
+        _write_attempt,
+        finalize_metrics,
+        next_snapshot_id,
+    )
 
     spark = res.scored.sparkSession
     if mode == "overwrite":
@@ -211,6 +222,7 @@ def write_outputs(res: QcResult, out_dir: str, mode: str = "overwrite") -> dict:
         # leaves an empty committed view, never old lineage over new rows
         for tbl in ("kept", "dropped", "metrics_partials", "lineage"):
             shutil.rmtree(f"{out_dir}/{tbl}.parquet", ignore_errors=True)
+        _drop_pending(out_dir)
     snap = next_snapshot_id(spark, out_dir)
     lin = _write_attempt(res.scored, out_dir, snap, "append")
     finalize_metrics(spark, out_dir)

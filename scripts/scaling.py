@@ -449,9 +449,11 @@ box).
   table (scores_stage.parquet) during derivation and every increment
   reads its buckets back instead of re-scoring — the UDF runs ONCE
   over the input across the whole resumable load, same as the
-  one-shot. Remaining machinery per increment is exactly THREE Spark
-  jobs (kept write, dropped write, one collect of the grouping-sets
-  grains frame); metric partials + the lineage commit are split in
+  one-shot. (Later the stage itself went: a load's first call now
+  writes every bucket's rows once, and each later call only appends
+  lineage rows from the pending record — no Spark job.) Remaining
+  machinery per increment is exactly THREE Spark jobs (kept write,
+  dropped write, one collect of the grouping-sets grains frame); metric partials + the lineage commit are split in
   pandas and appended driver-side as single pyarrow files (atomic
   rename = the commit point), and finalize_metrics computes all three
   side tables driver-side from the dimension-sized partials (pandas

@@ -206,11 +206,11 @@ def test_payload_rewriting_stages_drop_carried_features(spark, odd_table):
 
 
 def test_resume_on_dedup_survivors_reuses_features(spark, odd_table, tmp_path):
-    """The dedup -> run --resume --check-acoustics chain: the staged
-    scores of dedup survivors already carry the features, so increments
-    reuse them instead of joining a second copy on. The resumed
-    kept/dropped equal the one-shot run, and a bucket replace on the
-    same input commits."""
+    """The dedup -> run --resume --check-acoustics chain: dedup survivors
+    already carry the features, so the resumable load's one scoring pass
+    reuses them instead of decoding again. The resumed kept/dropped
+    equal the one-shot run, and a bucket replace on the same input
+    commits."""
     from qcflow.checkpoint import merge_replace_buckets, read_committed, run_resumable
     from qcflow.pipeline import write_outputs
 
@@ -242,37 +242,33 @@ def test_resume_on_dedup_survivors_reuses_features(spark, odd_table, tmp_path):
 
 
 def test_byte_joined_increment_decodes_once(spark, odd_table, tmp_path):
-    """A resumable increment that joins decoded acoustic features onto
-    the staged scores decodes the payload once: one Python eval over
-    `bytes` across every SQL execution of the increment (the joined
-    frame is checkpointed once, then committed)."""
+    """A check_acoustics resumable load decodes each payload once across
+    all its calls: the call that writes the rows makes one Python eval
+    over `bytes` across all its SQL executions, and the call that
+    commits them makes none."""
     from qcflow.checkpoint import read_committed, run_resumable
 
     path, _ = odd_table
     out = str(tmp_path / "resumed")
-    run_resumable(spark, path, out, n_buckets=4, max_buckets=0, check_acoustics=True)
-    plans = _executions(
-        spark,
-        lambda: run_resumable(spark, path, out, n_buckets=4, check_acoustics=True),
-    )
-    assert _decode_evals(plans) == 1, plans
+    for max_buckets, evals in ((0, 1), (None, 0)):
+        plans = _executions(
+            spark,
+            lambda: run_resumable(
+                spark, path, out, n_buckets=4, max_buckets=max_buckets,
+                check_acoustics=True,
+            ),
+        )
+        assert _decode_evals(plans) == evals, plans
     n = spark.read.parquet(path).count()
     assert sum(read_committed(spark, out, t).count() for t in ("kept", "dropped")) == n
 
 
 def test_repeated_clip_id_keeps_one_row_per_copy(spark, clips_t2k, tmp_path):
     """21 rows where one clip_id appears twice, the second copy with
-    NULL bytes: every path that joins byte-derived columns back onto
-    the text features — score_clips' slim decode path and the staged
-    resumable path with PCM consistency and acoustic features — yields
-    21 scored rows, each copy with its own features."""
-    from qcflow.checkpoint import (
-        _read_stage_cached,
-        _scored_from_stage,
-        load_thresholds,
-        read_committed,
-        run_resumable,
-    )
+    NULL bytes: score_clips' slim decode path, its full path with PCM
+    consistency and acoustic features, and the resumable load over
+    both yield 21 scored rows, each copy with its own features."""
+    from qcflow.checkpoint import read_committed, run_resumable
     from qcflow.rules import Thresholds
 
     base = (
@@ -308,17 +304,14 @@ def test_repeated_clip_id_keeps_one_row_per_copy(spark, clips_t2k, tmp_path):
     res = score_clips(spark, clips, thresholds=thr, check_acoustics=True)
     check(res.scored)
     res.release()
+    res = score_clips(
+        spark, clips, thresholds=thr, check_pcm=True, check_acoustics=True
+    )
+    check(res.scored, ("ac_rms", "pcm_dur_ms"))
+    res.release()
 
     out = str(tmp_path / "resumed")
     run_resumable(spark, path, out, n_buckets=4, max_buckets=0)
-    staged = _read_stage_cached(spark, out)
-    thr = load_thresholds(out)
-    every = [0, 1, 2, 3]
-    check(
-        _scored_from_stage(staged, clips, thr, 4, every, True, True),
-        ("ac_rms", "pcm_dur_ms"),
-    )
-    check(_scored_from_stage(staged, clips, thr, 4, every, False, True))
     run_resumable(spark, path, out, n_buckets=4, check_pcm=True, check_acoustics=True)
     ids = [
         r["clip_id"]

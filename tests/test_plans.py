@@ -126,54 +126,13 @@ def test_bucket_filter_pushdown_on_outputs(spark, tmp_path, clips_t2k):
     assert kept.count() > 0
 
 
-def test_stage_backed_increment_pushes_bucket_filter(spark, tmp_path, clips_t2k):
-    """A stage-backed resumable increment reads only its buckets of the
-    flat scores_stage table: the bucket IN-list must reach the parquet
-    scan as a pushed filter (row-group skipping on the bucket-sorted
-    files), not run as a Filter above a full scan."""
-    from qcflow.checkpoint import (
-        _read_stage_cached,
-        _scored_from_stage,
-        load_thresholds,
-        run_resumable,
-    )
-
-    out = str(tmp_path / "resume")
-    run_resumable(spark, clips_t2k, out, n_buckets=16, max_buckets=2)
-    scored = _scored_from_stage(
-        _read_stage_cached(spark, out), None, load_thresholds(out), 16,
-        [5, 6, 7], False, False,
-    )
-    p = plan_of(scored)
-    assert "scores_stage.parquet" in p
-    assert "PushedFilters" in p, p
-    seg = p.split("PushedFilters")[1][:200]
-    assert "In(bucket, [5,6,7])" in seg, seg
-
-
-def _first_stage_tasks(spark, fn) -> int:
-    """Task count of the first stage ``fn`` runs (its scan + Python
-    stage), read from the status tracker by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup("one-wave", "one-wave")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    stages = [
-        s for j in st.getJobIdsForGroup("one-wave")
-        for s in st.getJobInfo(j).stageIds
-    ]
-    return st.getStageInfo(min(stages)).numTasks
-
-
-def test_text_pass_runs_one_task_per_core(spark, tmp_path, clips_t2k):
+def test_text_pass_runs_one_task_per_core(spark, tmp_path, clips_t2k, monkeypatch):
     """The langid/perplexity crossing costs a fixed price per wave of
     Python tasks, not per row: on a scan with more splits than cores,
-    score_clips' persisted frame and the staging write's scoring stage
-    both run exactly one task per core (no shuffle added)."""
-    from qcflow.checkpoint import _stage_scores
+    score_clips' persisted frame and the frame the first run_resumable
+    call scores both have exactly one partition per core (no shuffle
+    added)."""
+    from qcflow import checkpoint
     from qcflow.pipeline import score_clips
 
     n = spark.sparkContext.defaultParallelism
@@ -185,10 +144,19 @@ def test_text_pass_runs_one_task_per_core(spark, tmp_path, clips_t2k):
         res = score_clips(spark, clips, thresholds=_dummy_thr())
         assert res._cached.rdd.getNumPartitions() == n
         res.release()
-        tasks = _first_stage_tasks(
-            spark, lambda: _stage_scores(clips, str(tmp_path / "st"), 16)
+
+        seen = []
+
+        def spy(spark_, clips_, **kw):
+            res = score_clips(spark_, clips_, **kw)
+            seen.append((clips_.rdd.getNumPartitions(), res._cached.rdd.getNumPartitions()))
+            return res
+
+        monkeypatch.setattr(checkpoint, "score_clips", spy)
+        checkpoint.run_resumable(
+            spark, clips_t2k, str(tmp_path / "st"), n_buckets=16, max_buckets=0
         )
-        assert tasks == n
+        assert len(seen) == 1 and seen[0][0] > 2 * n and seen[0][1] == n
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 

@@ -20,6 +20,7 @@ from qcflow.checkpoint import (
     process_increment,
     read_committed,
     read_metrics,
+    read_pending,
     run_resumable,
     vacuum,
 )
@@ -81,27 +82,37 @@ def _writer_tasks(files: set[str]) -> set[tuple[str, str]]:
     return set(keys)
 
 
+def _assert_one_write(table_dir: str, fan_out: int) -> set[str]:
+    """One write job, one flat bucket-sorted file per writer task, and
+    the rebalance sizes the writer count to the data (never above the
+    shuffle fan-out, never one per bucket). Returns the data files."""
+    files = _data_files(table_dir)
+    tasks = _writer_tasks(files)
+    assert len({job for _, job in tasks}) == 1, table_dir
+    assert 1 <= len(tasks) <= fan_out, table_dir
+    return files
+
+
 def test_resume_matches_oneshot(spark, out_dirs):
     resumed, oneshot = out_dirs
+    fan_out = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # attempt 1 "dies" after 5 of 16 buckets
     r1 = run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS, max_buckets=5)
     assert r1["processed_buckets"] == 5
     assert len(completed_buckets(spark, resumed)) == 5
-    stage_tasks = _writer_tasks(_data_files(f"{resumed}/scores_stage.parquet"))
-    before = {t: _data_files(f"{resumed}/{t}.parquet") for t in ("kept", "dropped")}
+    # ... having written the rows of all 16 buckets in one job per table
+    before = {
+        t: _assert_one_write(f"{resumed}/{t}.parquet", fan_out)
+        for t in ("kept", "dropped")
+    }
 
-    # attempt 2 finishes the rest
+    # attempt 2 finishes the rest, committing lineage only
     r2 = run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS)
     assert r2["processed_buckets"] == 11
     assert r2["remaining"] == 0
-    # the stage-backed increment wrote from the staged scan's own tasks:
-    # one flat file per writer task, at most one per stage file
     for table in ("kept", "dropped"):
-        added = _data_files(f"{resumed}/{table}.parquet") - before[table]
-        tasks = _writer_tasks(added)
-        assert len({job for _, job in tasks}) == 1, table
-        assert 1 <= len(tasks) <= len(stage_tasks), table
+        assert _data_files(f"{resumed}/{table}.parquet") == before[table], table
 
     # attempt 3 is a no-op (idempotence)
     r3 = run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS)
@@ -111,15 +122,14 @@ def test_resume_matches_oneshot(spark, out_dirs):
     clips = spark.read.parquet(CLIPS)
     res = score_clips(spark, clips, n_buckets=N_BUCKETS)
     write_outputs(res, oneshot)
-    # one write job per table, one flat file per writer task, and the
-    # rebalance sizes the writer count to the data (never above the
-    # shuffle fan-out, never one per bucket)
-    fan_out = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for table in ("kept", "dropped"):
-        tasks = _writer_tasks(_data_files(f"{oneshot}/{table}.parquet"))
-        assert len({job for _, job in tasks}) == 1, table
-        assert 1 <= len(tasks) <= fan_out, table
+        _assert_one_write(f"{oneshot}/{table}.parquet", fan_out)
+    _assert_matches_oneshot(spark, resumed, oneshot)
 
+
+def _assert_matches_oneshot(spark, resumed: str, oneshot: str) -> None:
+    """The resumed load's committed kept/dropped, lineage and three
+    finalized metrics tables equal the one-shot run's."""
     for table in ["kept", "dropped"]:
         a = _pdf(read_committed(spark, resumed, table))
         b = _pdf(spark.read.parquet(f"{oneshot}/{table}.parquet"))
@@ -292,9 +302,6 @@ def test_vacuum_drops_dead_rows(spark, tmp_path, clips_ready):
     # superseded snapshots: replace one bucket, creating dead history
     bucket = int(spark.read.parquet(f"{out}/kept.parquet").first()["bucket"])
     merge_replace_buckets(spark, CLIPS, out, [bucket], n_buckets=N_BUCKETS)
-    # the stage refresh rewrote the whole stage in one flat write
-    stage_tasks = _writer_tasks(_data_files(f"{out}/scores_stage.parquet"))
-    assert len({job for _, job in stage_tasks}) == 1
     kept = spark.read.parquet(f"{out}/kept.parquet")
     dead = kept.limit(30).withColumn("snapshot_id", F.lit(777).cast("long"))
     dead.write.mode("append").parquet(f"{out}/kept.parquet")
@@ -560,6 +567,44 @@ def test_metric_reads_run_no_spark_jobs(spark, tmp_path, clips_ready):
     assert rows
 
 
+def _all_jobs(spark, fn) -> int:
+    """Spark jobs that ``fn`` submits from ANY thread: job ids new to the
+    application's status store once its listener bus has drained."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def ids():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    before = ids()
+    fn()
+    return len(ids() - before)
+
+
+def test_commit_only_call_runs_no_spark_jobs(spark, tmp_path, clips_ready):
+    """Once a resumable load's rows are written, a call that only commits
+    appends lineage: it submits no Spark job from any thread — the last
+    call's metrics finalize included — and adds no file to kept, dropped
+    or metrics_partials."""
+    out = str(tmp_path / "commit_only")
+    run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS, max_buckets=5)
+    tables = ("kept", "dropped", "metrics_partials")
+    before = {t: _data_files(f"{out}/{t}.parquet") for t in tables}
+    for cap, want in ((5, {"processed_buckets": 5, "remaining": 6}),
+                      (None, {"processed_buckets": 6, "remaining": 0})):
+        got = []
+        assert _all_jobs(spark, lambda: got.append(run_resumable(
+            spark, CLIPS, out, n_buckets=N_BUCKETS, max_buckets=cap
+        ))) == 0
+        assert got == [want]
+        for t in tables:
+            assert _data_files(f"{out}/{t}.parquet") == before[t], t
+    assert len(completed_buckets(spark, out)) == N_BUCKETS
+    assert read_pending(out) is None
+    assert os.path.exists(f"{out}/metrics_drop_reasons.parquet")
+
+
 def test_read_committed_builds_without_jobs(spark, tmp_path, clips_ready):
     """A committed read takes the data schema from one file's footer:
     building the DataFrame submits no Spark job (no schema inference),
@@ -574,7 +619,9 @@ def test_read_committed_builds_without_jobs(spark, tmp_path, clips_ready):
         assert sorted(got[0].schema, key=lambda f: f.name) == sorted(
             inferred.schema, key=lambda f: f.name
         ), table
-        assert got[0].count() == inferred.count(), table
+        # the load's other 14 buckets are written but not committed yet
+        done = completed_buckets(spark, out)
+        assert got[0].count() == inferred.filter(F.col("bucket").isin(done)).count(), table
 
 
 def test_remaining_counts_buckets_left_when_capped(spark, tmp_path, clips_ready):
@@ -613,29 +660,62 @@ def test_inspect_reads_manifest_without_jobs(spark, tmp_path, capsys):
             ]
         ],
         "committed_buckets": 6,
+        "pending": None,
     }
 
 
+def test_inspect_reports_pending_load(spark, tmp_path, clips_ready, capsys):
+    """In the middle of a resumable load, `qcflow inspect` reports the
+    pending snapshot and its buckets not yet committed, from the pending
+    record and the manifest: no Spark job."""
+    import json
+
+    from qcflow import cli
+
+    out = str(tmp_path / "inspect_pending")
+    run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS, max_buckets=6)
+    capsys.readouterr()
+    assert _jobs(spark, lambda: cli.main(["inspect", "--out", out])) == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert got["pending"] == {"snapshot_id": 0, "buckets": 10}
+    assert got["committed_buckets"] == 6
+    assert [(s["snapshot_id"], s["kind"], s["n_buckets"]) for s in got["snapshots"]] == [
+        (0, "append", 6)
+    ]
+
+
 def test_staged_scores_exist_and_legacy_fallback(spark, tmp_path, clips_ready):
-    """r5: the first attempt stages its threshold-pass scores; increments
-    read them instead of re-running the langid UDF. A legacy out_dir
-    (thresholds saved, no stage table) must still resume correctly via
-    the re-score fallback, and both paths land the identical kept set."""
+    """The first call writes the rows of every bucket, committing only
+    its share; later calls commit the rest without re-scoring. A
+    directory whose pending record is gone (thresholds saved, rows of
+    the uncommitted buckets dead) must still resume correctly by
+    re-scoring those buckets, and both paths land the identical kept
+    set."""
     import os
-    import shutil
 
     staged_dir = str(tmp_path / "staged")
     run_resumable(spark, CLIPS, staged_dir, n_buckets=N_BUCKETS, max_buckets=6)
-    assert os.path.exists(f"{staged_dir}/scores_stage.parquet")
-    # staged table covers the FULL input (derivation pass), one row per clip
-    staged = spark.read.parquet(f"{staged_dir}/scores_stage.parquet")
-    assert staged.count() == 2000
-    assert staged.select("clip_id").distinct().count() == 2000
+    # the raw rows cover the FULL input, one row per clip ...
+    raw = spark.read.parquet(f"{staged_dir}/kept.parquet").select(
+        "clip_id", "bucket"
+    ).unionByName(
+        spark.read.parquet(f"{staged_dir}/dropped.parquet").select("clip_id", "bucket")
+    )
+    assert raw.count() == 2000
+    assert raw.select("clip_id").distinct().count() == 2000
+    # ... and the committed view covers the 6 committed buckets, whole
+    done = completed_buckets(spark, staged_dir)
+    assert len(done) == 6
+    committed = read_committed(spark, staged_dir, "kept").select(
+        "clip_id", "bucket"
+    ).unionByName(read_committed(spark, staged_dir, "dropped").select("clip_id", "bucket"))
+    assert sorted(r[0] for r in committed.select("bucket").distinct().collect()) == done
+    assert committed.count() == raw.filter(F.col("bucket").isin(done)).count()
 
-    # legacy twin: same thresholds, stage table deleted before the resume
+    # legacy twin: same thresholds, pending record deleted before the resume
     legacy_dir = str(tmp_path / "legacy")
     run_resumable(spark, CLIPS, legacy_dir, n_buckets=N_BUCKETS, max_buckets=6)
-    shutil.rmtree(f"{legacy_dir}/scores_stage.parquet")
+    os.remove(f"{legacy_dir}/pending.json")
     run_resumable(spark, CLIPS, legacy_dir, n_buckets=N_BUCKETS)
 
     run_resumable(spark, CLIPS, staged_dir, n_buckets=N_BUCKETS)
@@ -646,8 +726,8 @@ def test_staged_scores_exist_and_legacy_fallback(spark, tmp_path, clips_ready):
 
 
 def test_resume_with_byte_stages_matches_oneshot(spark, tmp_path, clips_ready):
-    """r5: the staged-score resume path with check_pcm on (byte-derived
-    columns joined onto the staged narrow frame) must equal the one-shot
+    """The resume path with check_pcm on (byte-derived columns scored in
+    the first call, committed over two) must equal the one-shot
     check_pcm pipeline row-for-row."""
     resumed = str(tmp_path / "resumed_pcm")
     oneshot = str(tmp_path / "oneshot_pcm")
@@ -667,13 +747,10 @@ def test_resume_with_byte_stages_matches_oneshot(spark, tmp_path, clips_ready):
 
 
 def test_merge_replace_refreshes_stage(spark, tmp_path, clips_ready):
-    """r5: replacing a bucket from a corrected input must refresh that
-    bucket's STAGED scores too (dynamic partition overwrite), so the
-    stage table never serves stale pre-correction rows, while other
-    buckets' staged rows stay untouched."""
-    from qcflow.checkpoint import merge_replace_buckets
-    from qcflow.pipeline import bucket_col
-
+    """Replacing a bucket from a corrected input replaces its committed
+    rows: every row of the corrected bucket is dropped for
+    ``empty_transcript``, while other buckets' committed rows stay
+    untouched."""
     out = str(tmp_path / "replace_stage")
     run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS)
 
@@ -688,44 +765,35 @@ def test_merge_replace_refreshes_stage(spark, tmp_path, clips_ready):
         ).otherwise(F.col("transcript")),
     )
     corrected.write.mode("overwrite").parquet(corrected_path)
-    before = (
-        spark.read.parquet(f"{out}/scores_stage.parquet")
-        .filter(F.col("bucket") != target)
-        .toPandas()
-        .sort_values("clip_id")
-        .reset_index(drop=True)
-    )
+
+    def others():
+        return {
+            t: _pdf(read_committed(spark, out, t).filter(F.col("bucket") != target), ())
+            for t in ("kept", "dropped")
+        }
+
+    def n_target(t):
+        return read_committed(spark, out, t).filter(F.col("bucket") == target).count()
+
+    before, n_before = others(), n_target("kept") + n_target("dropped")
     merge_replace_buckets(spark, corrected_path, out, [target], n_buckets=N_BUCKETS)
 
-    staged = spark.read.parquet(f"{out}/scores_stage.parquet")
-    # replaced bucket's staged rows reflect the corrected (empty) transcripts
-    tgt = staged.filter(F.col("bucket") == target).toPandas()
-    assert len(tgt) > 0 and (tgt.n_chars == 0).all()
-    # other buckets untouched
-    after = (
-        staged.filter(F.col("bucket") != target)
-        .toPandas()
-        .sort_values("clip_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        before[sorted(before.columns)], after[sorted(after.columns)]
-    )
+    # other buckets' committed rows untouched
+    after = others()
+    for t in ("kept", "dropped"):
+        pd.testing.assert_frame_equal(before[t], after[t])
     # and the committed view dropped every corrected clip
     dropped = read_committed(spark, out, "dropped").filter(
         F.col("bucket") == target
     )
-    kept = read_committed(spark, out, "kept").filter(F.col("bucket") == target)
-    assert kept.count() == 0
+    assert n_target("kept") == 0
+    assert n_before > 0 and dropped.count() == n_before
     assert dropped.filter(F.col("drop_reasons").contains("empty_transcript")).count() == dropped.count()
 
 
-@pytest.mark.parametrize("staged", [True, False], ids=["stage", "no_stage"])
-def test_merge_replace_keeps_acoustic_rules(spark, tmp_path, clips_ready, staged):
-    """A bucket replace in a run with check_acoustics applies the
-    acoustic rules too: a planted clipped clip in the replaced bucket
-    stays dropped for ``clipped_audio``, through the stage refresh and
-    through the no-stage re-score."""
+def _clipped_table(spark, tmp_path, n_buckets: int):
+    """80 pcm16 clips plus a planted clipped clip ``x-clipped``; returns
+    the table's path and the planted clip's bucket."""
     from qcflow import audio
     from qcflow.pipeline import bucket_col
 
@@ -746,18 +814,14 @@ def test_merge_replace_keeps_acoustic_rules(spark, tmp_path, clips_ready, staged
     spark.createDataFrame(rows, schema=base.schema).write.parquet(path)
     target = (
         spark.read.parquet(path).filter(F.col("clip_id") == "x-clipped")
-        .select(bucket_col(4)).first()[0]
+        .select(bucket_col(n_buckets)).first()[0]
     )
+    return path, target
 
-    out = str(tmp_path / "out")
-    run_resumable(spark, path, out, n_buckets=4, check_acoustics=True)
-    if not staged:
-        import shutil
 
-        shutil.rmtree(f"{out}/scores_stage.parquet")
-    merge_replace_buckets(
-        spark, path, out, [target], n_buckets=4, check_acoustics=True
-    )
+def _assert_clipped_dropped(spark, out: str, n: int = 81) -> None:
+    """``x-clipped`` is committed once, dropped for ``clipped_audio``, and
+    the committed view holds each of the ``n`` clips once."""
     row = (
         read_committed(spark, out, "dropped")
         .filter(F.col("clip_id") == "x-clipped").collect()
@@ -766,3 +830,96 @@ def test_merge_replace_keeps_acoustic_rules(spark, tmp_path, clips_ready, staged
     assert "clipped_audio" in row[0]["drop_reasons"].split(",")
     kept = read_committed(spark, out, "kept")
     assert kept.filter(F.col("clip_id") == "x-clipped").count() == 0
+    ids = kept.select("clip_id").unionByName(
+        read_committed(spark, out, "dropped").select("clip_id")
+    ).toPandas()["clip_id"]
+    assert len(ids) <= n and ids.is_unique
+
+
+@pytest.mark.parametrize("pending", [True, False], ids=["pending", "complete"])
+def test_merge_replace_keeps_acoustic_rules(spark, tmp_path, clips_ready, pending):
+    """A bucket replace in a run with check_acoustics applies the
+    acoustic rules too: a planted clipped clip in the replaced bucket
+    stays dropped for ``clipped_audio``, whether the replace comes while
+    a resumable load's write is pending (the load then commits its other
+    buckets, never its own rows for the replaced one) or after the load
+    is complete."""
+    path, target = _clipped_table(spark, tmp_path, 4)
+    out = str(tmp_path / "out")
+    run_resumable(
+        spark, path, out, n_buckets=4, check_acoustics=True,
+        max_buckets=0 if pending else None,
+    )
+    assert (read_pending(out) is not None) == pending
+    merge_replace_buckets(
+        spark, path, out, [target], n_buckets=4, check_acoustics=True
+    )
+    _assert_clipped_dropped(spark, out)
+    if pending:
+        r = run_resumable(spark, path, out, n_buckets=4, check_acoustics=True)
+        assert r == {"processed_buckets": 3, "remaining": 0}
+        assert read_pending(out) is None
+        _assert_clipped_dropped(spark, out)
+        n = sum(read_committed(spark, out, t).count() for t in ("kept", "dropped"))
+        assert n == 81
+
+
+def test_pending_rows_of_other_flags_are_rescored(spark, tmp_path, clips_ready):
+    """A call with check_acoustics, after a first call without it, does
+    not commit the pending rows scored without the acoustic rules: it
+    re-scores the uncommitted buckets, so the planted clipped clip is
+    dropped for ``clipped_audio``."""
+    path, _ = _clipped_table(spark, tmp_path, 4)
+    out = str(tmp_path / "out")
+    run_resumable(spark, path, out, n_buckets=4, max_buckets=0)
+    first = read_pending(out)["snapshot_id"]
+    r = run_resumable(spark, path, out, n_buckets=4, check_acoustics=True)
+    assert r == {"processed_buckets": 4, "remaining": 0}
+    _assert_clipped_dropped(spark, out)
+    n = sum(read_committed(spark, out, t).count() for t in ("kept", "dropped"))
+    assert n == 81
+    # the first call's rows stay dead
+    snaps = read_committed(spark, out, "dropped").select("snapshot_id").distinct()
+    assert first not in [r[0] for r in snaps.collect()]
+
+
+def test_vacuum_keeps_pending_rows(spark, out_dirs):
+    """``vacuum`` between two calls of a resumable load drops dead rows
+    but keeps the rows and partials of the uncommitted buckets: finishing
+    the load then equals the one-shot run."""
+    from qcflow.checkpoint import next_snapshot_id
+
+    resumed, oneshot = out_dirs
+    run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS, max_buckets=5)
+    burned = next_snapshot_id(spark, resumed)
+    kept = spark.read.parquet(f"{resumed}/kept.parquet")
+    kept.limit(30).withColumn("snapshot_id", F.lit(burned).cast("long")).write.mode(
+        "append"
+    ).parquet(f"{resumed}/kept.parquet")
+    vacuum(spark, resumed)
+    raw = spark.read.parquet(f"{resumed}/kept.parquet")
+    assert raw.filter(F.col("snapshot_id") == burned).count() == 0
+    r = run_resumable(spark, CLIPS, resumed, n_buckets=N_BUCKETS)
+    assert r == {"processed_buckets": 11, "remaining": 0}
+
+    res = score_clips(spark, spark.read.parquet(CLIPS), n_buckets=N_BUCKETS)
+    write_outputs(res, oneshot)
+    res.release()
+    _assert_matches_oneshot(spark, resumed, oneshot)
+
+
+def test_empty_input_resumable(spark, tmp_path):
+    """An empty input through run_resumable raises derive_thresholds'
+    named error and leaves no lineage, no pending record and no
+    persisted frame behind."""
+    from qcflow.schema import CLIPS_SCHEMA
+
+    src = str(tmp_path / "empty.parquet")
+    spark.createDataFrame([], CLIPS_SCHEMA).write.parquet(src)
+    out = str(tmp_path / "out")
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="cannot derive thresholds"):
+        run_resumable(spark, src, out, n_buckets=4)
+    assert not os.path.exists(f"{out}/lineage.parquet")
+    assert read_pending(out) is None
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
