@@ -97,6 +97,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # one dedup + acoustic QC + write pass generates ~123 distinct
+        # classes; at the default 100-entry (segmented LRU) cache every
+        # repeat of that pass recompiled ~66 of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -20,7 +20,7 @@ import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROWS = int(os.environ.get("QCFLOW_CEILING_ROWS", str(1_500_000_000)))
 
 _TMPL = """

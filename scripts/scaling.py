@@ -25,12 +25,8 @@ import subprocess
 import sys
 
 ROWS = int(os.environ.get("QCFLOW_SCALING_ROWS", "150000"))
-CLIPS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".cache",
-    f"clips_scale{ROWS}_v2",
-)
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CLIPS = os.path.join(REPO, ".cache", f"clips_scale{ROWS}_v2")
 
 _RUN_TEMPLATE = """
 import json, time

@@ -2,10 +2,12 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from qcflow.session import get_spark  # noqa: E402
 
@@ -24,7 +26,7 @@ def sf_dir():
     return SF_DIR
 
 
-CLIPS_T2K = "/root/repo/.cache/clips_t2k"
+CLIPS_T2K = str(REPO / ".cache" / "clips_t2k")
 
 
 @pytest.fixture(scope="session")

@@ -5,10 +5,13 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from qcflow.pipeline import dedup_table
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _with_planted_copies(spark, clips_t2k, n_base=60, n_copy=12):
@@ -85,7 +88,7 @@ def test_cli_dedup_stage(tmp_path, clips_t2k, spark):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert p.returncode == 0, p.stderr[-2000:]
@@ -146,7 +149,7 @@ def test_cli_decontaminate_stage(tmp_path, clips_t2k, spark):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert p.returncode == 0, p.stderr[-2000:]

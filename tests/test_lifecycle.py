@@ -11,6 +11,9 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _cli(*args: str, timeout: int = 420) -> dict:
@@ -18,7 +21,7 @@ def _cli(*args: str, timeout: int = 420) -> dict:
         [sys.executable, "-m", "qcflow.cli", *args, "--cpus", "4"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=timeout,
     )
     assert p.returncode == 0, (args[0], p.stderr[-2000:])

@@ -5,10 +5,13 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from qcflow.pipeline import normalize_clips, pack_table
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _normalized(spark, clips_t2k, n=60):
@@ -80,7 +83,7 @@ def test_cli_pack_stage(tmp_path, clips_t2k, spark):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert p.returncode == 0, p.stderr[-2000:]

@@ -8,6 +8,7 @@ invariance.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -17,7 +18,7 @@ from qcflow import synth
 from qcflow.pipeline import score_clips
 from qcflow.reference_labeler import label
 
-CACHE = "/root/repo/.cache/clips_t2k"
+CACHE = str(Path(__file__).resolve().parent.parent / ".cache" / "clips_t2k")
 N_ROWS = 2000
 
 

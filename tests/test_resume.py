@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import re
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -26,7 +27,8 @@ from qcflow.checkpoint import (
 )
 from qcflow.pipeline import score_clips, write_outputs
 
-CLIPS = "/root/repo/.cache/clips_t2k/clips.parquet"
+CLIPS_T2K = str(Path(__file__).resolve().parent.parent / ".cache" / "clips_t2k")
+CLIPS = f"{CLIPS_T2K}/clips.parquet"
 N_BUCKETS = 16
 
 
@@ -42,7 +44,7 @@ def clips_ready(spark):
     from qcflow import synth
 
     if not os.path.exists(f"{CLIPS}/_SUCCESS"):
-        synth.generate_clips(spark, 2000, "/root/repo/.cache/clips_t2k", partitions=8)
+        synth.generate_clips(spark, 2000, CLIPS_T2K, partitions=8)
     return CLIPS
 
 
@@ -923,3 +925,156 @@ def test_empty_input_resumable(spark, tmp_path):
     assert not os.path.exists(f"{out}/lineage.parquet")
     assert read_pending(out) is None
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+_COMMITTED_TABLES = (
+    "kept", "dropped", "metrics_partials", "lineage",
+    "metrics_drop_reasons", "metrics_lang_conf", "metrics_quantiles",
+)
+
+
+def _table_bytes(out: str, table: str) -> list[bytes]:
+    """The contents of a table's data files, in a name-free order (Spark
+    file names carry a per-job id)."""
+    files = _data_files(f"{out}/{table}.parquet")
+    assert files, (out, table)
+    return sorted(Path(f).read_bytes() for f in files)
+
+
+def _assert_compact(out: str) -> None:
+    """Every column chunk of every committed table is zstd, and no
+    driver-written file (everything but kept and dropped, which Spark
+    writes) carries a pandas or Arrow schema blob."""
+    for table in _COMMITTED_TABLES:
+        for path in _data_files(f"{out}/{table}.parquet"):
+            md = pq.read_metadata(path)
+            codecs = {
+                md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)
+            }
+            assert codecs == {"ZSTD"}, (path, codecs)
+            if table not in ("kept", "dropped"):
+                keys = set(md.metadata or {})
+                assert not keys & {b"pandas", b"ARROW:schema"}, (path, keys)
+
+
+def test_committed_tables_are_compact(spark, tmp_path, clips_ready):
+    """The committed format, over the three paths that write it: a
+    one-shot ``write_outputs``, a resumable load, and a ``vacuum`` of a
+    directory with dead rows. Two writes of one scored frame give the
+    same bytes."""
+    res = score_clips(spark, spark.read.parquet(CLIPS), n_buckets=N_BUCKETS)
+    one, two = str(tmp_path / "one"), str(tmp_path / "two")
+    write_outputs(res, one)
+    write_outputs(res, two)
+    res.release()
+    _assert_compact(one)
+    for table in _COMMITTED_TABLES:
+        assert _table_bytes(one, table) == _table_bytes(two, table), table
+
+    out = str(tmp_path / "resumed")
+    run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS, max_buckets=5)
+    run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS)
+    _assert_compact(out)
+    merge_replace_buckets(spark, CLIPS, out, [0], n_buckets=N_BUCKETS)
+    vacuum(spark, out)
+    _assert_compact(out)
+
+
+def _old_format_append(dir_path: str, pdf, spec, name: str) -> None:
+    """``_append_parquet_file`` as it wrote before zstd: snappy, with
+    the pandas and ARROW:schema blobs in the footer."""
+    import pyarrow as pa
+
+    types = {
+        "long": pa.int64(), "int": pa.int32(),
+        "string": pa.string(), "double": pa.float64(),
+    }
+    schema = pa.schema([(n, types[t]) for n, t in spec])
+    os.makedirs(dir_path, exist_ok=True)
+    table = pa.Table.from_pandas(
+        pdf[[n for n, _ in spec]], schema=schema, preserve_index=False
+    )
+    tmp = f"{dir_path}.__tmp-{name}"
+    pq.write_table(table, tmp, compression="snappy")
+    os.replace(tmp, os.path.join(dir_path, f"part-{name}.parquet"))
+
+
+def test_old_format_manifest_files_read_alike(
+    spark, tmp_path, clips_ready, monkeypatch, capsys
+):
+    """An output directory written before zstd keeps reading the same
+    after an upgrade: old-format lineage and partials files next to
+    new ones, and new ones alone, give the same committed pairs, merged
+    metrics, quantiles and ``qcflow inspect`` output as old-format files
+    alone. Without the pandas blob the partials' nullable ``bin`` reads
+    back as float64; ``_merge_grain`` returns the same dtypes anyway."""
+    import json
+
+    from qcflow import checkpoint, cli
+    from qcflow.checkpoint import (
+        _committed_partials,
+        _merge_grain,
+        live_pairs,
+        read_quantile_metrics,
+    )
+
+    new_writer = checkpoint._append_parquet_file
+
+    def history(out: str, upgrade_after: int) -> None:
+        """A capped resumable load, its finishing call and a bucket
+        replace; old-format writes for the first ``upgrade_after``
+        steps."""
+        steps = [
+            lambda: run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS, max_buckets=5),
+            lambda: run_resumable(spark, CLIPS, out, n_buckets=N_BUCKETS),
+            lambda: merge_replace_buckets(spark, CLIPS, out, [3], n_buckets=N_BUCKETS),
+        ]
+        for i, step in enumerate(steps):
+            writer = _old_format_append if i < upgrade_after else new_writer
+            monkeypatch.setattr(checkpoint, "_append_parquet_file", writer)
+            step()
+        monkeypatch.setattr(checkpoint, "_append_parquet_file", new_writer)
+
+    def inspect(out: str) -> dict:
+        capsys.readouterr()
+        cli.main(["inspect", "--out", out])
+        got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        del got["sec"]
+        return got
+
+    grains = ("drop_reasons", "lang_conf", "ppl_hist")
+
+    def view(out: str) -> dict:
+        partials = _committed_partials(out)
+        return {
+            "pairs": live_pairs(out).sort_values(["snapshot_id", "bucket"])
+            .reset_index(drop=True),
+            **{f"merged_{w}": _merge_grain(partials, w) for w in grains},
+            **{w: read_metrics(spark, out, w).toPandas() for w in grains},
+            "quantiles": read_quantile_metrics(spark, out).toPandas(),
+            "inspect": inspect(out),
+        }
+
+    dirs = {name: str(tmp_path / name) for name in ("old", "mixed", "new")}
+    for name, upgrade_after in (("old", 3), ("mixed", 1), ("new", 0)):
+        history(dirs[name], upgrade_after)
+    for table in ("lineage", "metrics_partials"):
+        kinds = {
+            b"pandas" in (pq.read_metadata(f).metadata or {})
+            for f in _data_files(f"{dirs['mixed']}/{table}.parquet")
+        }
+        assert kinds == {True, False}, table
+    assert str(_committed_partials(dirs["new"])["bin"].dtype) == "float64"
+    want = view(dirs["old"])
+    for name in ("mixed", "new"):
+        got = view(dirs[name])
+        assert got.pop("inspect") == want["inspect"], name
+        for key in got:
+            pd.testing.assert_frame_equal(got[key], want[key], obj=f"{name} {key}")
+        # the finalized metrics tables hold the same values in either format
+        for table in ("metrics_drop_reasons", "metrics_lang_conf", "metrics_quantiles"):
+            a = pd.read_parquet(f"{dirs['old']}/{table}.parquet")
+            b = pd.read_parquet(f"{dirs[name]}/{table}.parquet")
+            pd.testing.assert_frame_equal(a, b, check_dtype=False, obj=table)
